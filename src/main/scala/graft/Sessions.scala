@@ -10,7 +10,11 @@ import org.apache.spark.sql.SparkSession
   *   - shuffle partitions sized to the local core count (not 200) — on a
   *     real cluster this would be executors × cores with AQE coalescing;
   *   - AQE on: runtime shuffle coalescing, skew-join splitting;
-  *   - UTC session timezone for oracle parity.
+  *   - UTC session timezone for oracle parity;
+  *   - `file:` bound to [[LocalFs]]: without native Hadoop the stock local
+  *     filesystem forks `chmod` and `readlink` for every file it writes or
+  *     renames, which puts child processes on every streaming checkpoint
+  *     commit.
   */
 object Sessions {
   def builder(cpus: String): SparkSession.Builder =
@@ -40,6 +44,8 @@ object Sessions {
       // (the a32 rule), never relying on ANSI to catch a wrap.
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[LocalFs.Checksummed].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[LocalFs.Context].getName)
 
   def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")): SparkSession = {
     val spark = builder(cpus).getOrCreate()

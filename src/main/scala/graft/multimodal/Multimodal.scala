@@ -2,7 +2,6 @@ package graft.multimodal
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal column plumbing: image/audio/video payloads as opaque
   * `binary` columns with typed metadata, and distributed decode /
@@ -42,14 +41,6 @@ object Multimodal {
       kind: String,
       nBytes: Long,
       features: Array[Float])
-
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("mediaId", LongType, nullable = false),
-    StructField("kind", StringType, nullable = false),
-    StructField("blob", BinaryType, nullable = false),
-    StructField("width", IntegerType, nullable = false),
-    StructField("height", IntegerType, nullable = false),
-    StructField("sampleRate", IntegerType, nullable = false)))
 
   /** Partition-initialized decoder contract. */
   trait MediaCodec extends Serializable {

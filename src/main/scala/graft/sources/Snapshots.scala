@@ -835,8 +835,11 @@ object Snapshots {
     // typing join — previously each of those re-derived the caller's
     // change query (three scans of the change source per commit; guide
     // §1.2: don't recompute what you already have). Batch-sized, freed
-    // before return.
-    val ch = changes.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // before return. A batch the caller already cached stays the caller's:
+    // it is neither re-persisted nor unpersisted here.
+    val ownsCh = changes.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+    val ch =
+      if (ownsCh) changes.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else changes
     // ONE aggregation serves both the dup-key guard and every key-distinct
     // consumer below (hit test, anti-join, feed semi-joins) — the change
     // batch was previously re-aggregated four times per commit, which at
@@ -933,8 +936,9 @@ object Snapshots {
                     .otherwise(lit("insert"))
                     .as(ChangeTypeCol): _*))
         }
-        // the feed is at most one preimage + one postimage per change key
-        stageChanges(spark, dir, feed, approxRows = 2L * nKeys)
+        // the feed is at most one preimage + one postimage per change key,
+        // and one insert per key when no base file is touched
+        stageChanges(spark, dir, feed, approxRows = if (baseTouched.isEmpty) nKeys else 2L * nKeys)
       }
       val staged =
         if (statsCols.nonEmpty) zoneEntries(spark, stage, statsCols)
@@ -944,7 +948,7 @@ object Snapshots {
       publishChanges(spark, dir, chStage, v)
       v
     } finally {
-      ch.unpersist(blocking = false)
+      if (ownsCh) ch.unpersist(blocking = false)
       keyCounts.unpersist(blocking = false)
       baseTouched.foreach(_.unpersist(blocking = false))
       matchedKeysP.foreach(_.unpersist(blocking = false))
@@ -1574,14 +1578,6 @@ object Snapshots {
     if (paths.isEmpty) readVersion(spark, dir, version).filter(lit(false))
     else readFilesDv(spark, dir, version, paths).filter(col(column) === lit(value))
   }
-
-  /** [[readVersionPoint]] at the latest version. */
-  def readLatestPoint(
-      spark: SparkSession,
-      dir: String,
-      column: String,
-      value: Any): DataFrame =
-    readVersionPoint(spark, dir, latestVersion(spark, dir), column, value)
 
   // ---- Named refs (tags) -------------------------------------------------
 
@@ -2463,8 +2459,11 @@ object Snapshots {
     requireNoActiveDrop(spark, dir, prev, entries, "MERGE-ON-READ MERGE")
     // the change source is read once (persisted) and shared by the key
     // aggregation, the new-file staging write, and the feed's postimage
-    // typing join — the commitMerge convention (guide §1.2)
-    val ch = changes.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // typing join — the commitMerge convention (guide §1.2), caller's
+    // cache left alone included
+    val ownsCh = changes.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+    val ch =
+      if (ownsCh) changes.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else changes
     // one aggregation for the dup guard + every key-distinct consumer
     // (hit test, tombstone semi-join, feed) — the commitMerge convention
     val keyCounts = ch
@@ -2573,7 +2572,7 @@ object Snapshots {
       batchId.foreach(b => writeHwm(spark, dir, b, v))
       Some(v)
     } finally {
-      ch.unpersist(blocking = false)
+      if (ownsCh) ch.unpersist(blocking = false)
       keyCounts.unpersist(blocking = false)
       toFree.foreach(_.unpersist(blocking = false))
       ()

@@ -191,6 +191,30 @@ class SnapshotsSpec extends AnyFunSuite {
       == Set((1L, 10L), (2L, -2L), (3L, -3L)))
   }
 
+  test("merge commits leave a caller-cached change batch cached, and free their own") {
+    import spark.implicits._
+    import org.apache.spark.storage.StorageLevel
+    val dir = java.nio.file.Files.createTempDirectory("snap_merge_cache").toString
+    Snapshots.commitOverwrite(Seq((1L, 10L), (2L, 20L)).toDF("id", "x"), dir, Seq("id"))
+    val cached = Seq((2L, -2L), (3L, -3L)).toDF("id", "x").cache()
+    val mor = Seq((1L, -1L), (4L, -4L)).toDF("id", "x").cache()
+    try {
+      Snapshots.commitMerge(spark, dir, cached, "id")
+      Snapshots.commitMergeMor(spark, dir, mor, "id")
+      assert(cached.storageLevel == StorageLevel.MEMORY_AND_DISK, "commitMerge evicted the caller's cache")
+      assert(mor.storageLevel == StorageLevel.MEMORY_AND_DISK, "commitMergeMor evicted the caller's cache")
+    } finally {
+      cached.unpersist(blocking = true)
+      mor.unpersist(blocking = true)
+    }
+    val own = Seq((5L, -5L)).toDF("id", "x")
+    Snapshots.commitMerge(spark, dir, own, "id")
+    Snapshots.commitMergeMor(spark, dir, own, "id")
+    assert(own.storageLevel == StorageLevel.NONE, "a commit must free the cache it made")
+    assert(Snapshots.readLatest(spark, dir).as[(Long, Long)].collect().toSet
+      == Set((1L, -1L), (2L, -2L), (3L, -3L), (4L, -4L), (5L, -5L)))
+  }
+
   test("OPTIMIZE compacts files, tightens zone maps, moves no data; vacuum reclaims") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("snap_optimize").toString
