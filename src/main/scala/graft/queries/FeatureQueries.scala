@@ -3054,7 +3054,7 @@ object FeatureQueries {
     Snapshots.commitRename(spark, dir, "amount_cents", "cents")
     Snapshots.commitAppend(base.filter(pmod(col("event_id"), lit(3L)) === 2L), dir)
     val v1 = Snapshots
-      .readVersionRenamed(spark, dir, 1)
+      .readVersionEvolved(spark, dir, 1)
       .agg(
         count(lit(1)).as("n_events"),
         countDistinct(col("user_id")).as("n_users"),
@@ -3062,7 +3062,7 @@ object FeatureQueries {
       .select(lit(1L).as("version"), lit(-1L).as("third"), col("n_events"), col("n_users"),
         col("sum_cents"))
     val v3 = Snapshots
-      .readVersionRenamed(spark, dir, 3)
+      .readVersionEvolved(spark, dir, 3)
       .groupBy(pmod(col("event_id"), lit(3L)).as("third"))
       .agg(
         count(lit(1)).as("n_events"),

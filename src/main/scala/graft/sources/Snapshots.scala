@@ -56,9 +56,6 @@ object Snapshots {
   private val TsHeader = "#ts="
   private val RowsHeader = "#rows="
   private val CopiedHeader = "#copied="
-  private val RenameSeqHeader = "#renameseq="
-  private val WidenSeqHeader = "#widenseq="
-  private val DropSeqHeader = "#dropseq="
   private val DvHeader = "#dv="
   private val DvRowsHeader = "#dvrows="
   private val HwmName = "_batch.hwm"
@@ -102,10 +99,6 @@ object Snapshots {
     */
   final case class ManifestEntry(path: String, stats: Seq[ColStats], rows: Option[Long] = None)
 
-  /** (declared stats columns — empty when the snapshot carries no zone
-    * maps — and the entries). Public so specs and metadata harnesses can
-    * audit manifests without a data read.
-    */
   private val CrcHeader = "#crc="
 
   private def crc32Of(s: String): Long = {
@@ -183,6 +176,10 @@ object Snapshots {
     readVersion(spark, dir, v)
   }
 
+  /** (declared stats columns — empty when the snapshot carries no zone
+    * maps — and the entries). Public so specs and metadata harnesses can
+    * audit manifests without a data read.
+    */
   def manifest(
       spark: SparkSession,
       dir: String,
@@ -704,45 +701,10 @@ object Snapshots {
     * the retention/vacuum pass's job — same split as every
     * manifest-based format). Publishes and returns the new version.
     */
-  /** Renames whose mapping is still ACTIVE on `entries` — some live file
-    * was physically written under the old column name. The copy-on-write
-    * commits ([[commitDelete]], [[commitMerge]]) refuse while one is
-    * active: their raw parquet reads would pick one generation's footer
-    * and silently NULL the other's renamed column (data loss), and their
-    * staged rewrites escape the rename's fileKeys scope, resurrecting the
-    * old physical name for post-rename readers. [[commitOptimize]] is the
-    * fold: it reads THROUGH the rename mapping and rewrites every file
-    * under the new name, after which no mapping is active and the
-    * rewrite commits are legal again.
-    */
-  private def activeRenames(
-      spark: SparkSession,
-      dir: String,
-      version: Int,
-      entries: Seq[ManifestEntry]): Seq[ColumnRename] =
-    renameLog(spark, dir).filter(r =>
-      r.version <= version && entries.exists(e => r.fileKeys.contains(fileKey(e.path))))
-
-  private def requireNoActiveRename(
-      spark: SparkSession,
-      dir: String,
-      version: Int,
-      entries: Seq[ManifestEntry],
-      op: String): Unit = {
-    val active = activeRenames(spark, dir, version, entries)
-    require(active.isEmpty,
-      s"$op on $dir refused: column renames ${active.map(r => s"'${r.from}'->'${r.to}'").mkString(", ")} " +
-        "are still active on live files (a raw rewrite would silently NULL the renamed column " +
-        "across mixed physical schemas) — run commitOptimize first to fold the rename into a " +
-        "uniform physical schema")
-  }
-
   def commitDelete(spark: SparkSession, dir: String, column: String, lo: Long, hi: Long): Int = {
     val prev = latestVersion(spark, dir)
     val (statsCols, entries) = manifest(spark, dir, prev)
-    requireNoActiveRename(spark, dir, prev, entries, "DELETE")
-    requireNoActiveWiden(spark, dir, prev, entries, "DELETE")
-    requireNoActiveDrop(spark, dir, prev, entries, "DELETE")
+    requireNoActiveChange(spark, dir, prev, entries, "DELETE", SchemaKinds)
     val ci = statsCols.indexOf(column)
     require(ci >= 0, s"delete needs a zone map on $column; $dir declares $statsCols")
     val (touched, untouched) =
@@ -771,7 +733,8 @@ object Snapshots {
           chStage = Some(stageChanges(spark, dir,
             liveTouched
               .filter(col(column).between(lo, hi))
-              .withColumn(ChangeTypeCol, lit("delete"))))
+              .withColumn(ChangeTypeCol, lit("delete")),
+            approxRows = manifestRows(touched)))
           zoneEntries(spark, stage, statsCols)
         } finally {
           liveTouched.unpersist(blocking = false)
@@ -784,6 +747,25 @@ object Snapshots {
       dvCarryHeader(spark, dir, prev))
     chStage.foreach(publishChanges(spark, dir, _, v))
     v
+  }
+
+  /** Broadcast hint gated on a KNOWN row count. The change-batch key set
+    * and deletion vectors are broadcast-joined by design at CDC scale,
+    * but both are unbounded in principle — a backfill merge can carry
+    * hundreds of millions of keys, a long-unoptimized vector likewise —
+    * and a forced broadcast past Spark's 8 GB / 512M-row relation cap is
+    * a hard driver failure, not a slowdown (guide §3.1). At or under the
+    * threshold the hint pins the hash join (keeping the probe side's
+    * scan partitioning); above it the hint is dropped and the planner
+    * picks the join from its own estimates (shuffle join at real scale).
+    * Tunable: `spark.graft.broadcastMaxRows` (default 8M rows ≈ tens of
+    * MB hashed — comfortably under the cap, far above any CDC batch).
+    */
+  private def maybeBroadcast(spark: SparkSession, df: DataFrame, rows: Long): DataFrame = {
+    val cap =
+      try spark.conf.get("spark.graft.broadcastMaxRows", "8000000").toLong
+      catch { case _: NumberFormatException => 8000000L }
+    if (rows <= cap) broadcast(df) else df
   }
 
   /** Copy-on-write MERGE (keyed upsert) of a `changes` batch — the BATCH
@@ -804,32 +786,11 @@ object Snapshots {
     * [[graft.operators.LatestPerKey]]) and exactly the table's columns.
     * Publishes and returns the new version.
     */
-  /** Broadcast hint gated on a KNOWN row count. The change-batch key set
-    * and deletion vectors are broadcast-joined by design at CDC scale,
-    * but both are unbounded in principle — a backfill merge can carry
-    * hundreds of millions of keys, a long-unoptimized vector likewise —
-    * and a forced broadcast past Spark's 8 GB / 512M-row relation cap is
-    * a hard driver failure, not a slowdown (guide §3.1). At or under the
-    * threshold the hint pins the hash join (keeping the probe side's
-    * scan partitioning); above it the hint is dropped and the planner
-    * picks the join from its own estimates (shuffle join at real scale).
-    * Tunable: `spark.graft.broadcastMaxRows` (default 8M rows ≈ tens of
-    * MB hashed — comfortably under the cap, far above any CDC batch).
-    */
-  private def maybeBroadcast(spark: SparkSession, df: DataFrame, rows: Long): DataFrame = {
-    val cap =
-      try spark.conf.get("spark.graft.broadcastMaxRows", "8000000").toLong
-      catch { case _: NumberFormatException => 8000000L }
-    if (rows <= cap) broadcast(df) else df
-  }
-
   def commitMerge(spark: SparkSession, dir: String, changes: DataFrame, keyCol: String): Int = {
     val prev = latestVersion(spark, dir)
     require(prev >= 1, s"cannot merge into an empty table at $dir")
     val (statsCols, entries) = manifest(spark, dir, prev)
-    requireNoActiveRename(spark, dir, prev, entries, "MERGE")
-    requireNoActiveWiden(spark, dir, prev, entries, "MERGE")
-    requireNoActiveDrop(spark, dir, prev, entries, "MERGE")
+    requireNoActiveChange(spark, dir, prev, entries, "MERGE", SchemaKinds)
     // The change SOURCE is read once (persisted) and shared by the key
     // aggregation, the rewrite's union side, and the feed's postimage
     // typing join — previously each of those re-derived the caller's
@@ -990,35 +951,28 @@ object Snapshots {
     val f = fs(spark, new Path(entries.head.path))
     val totalBytes = entries.map(e => f.getFileStatus(new Path(e.path)).getLen).sum
     val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-    // OPTIMIZE is the rename FOLD: when a column-rename mapping is still
-    // active on live files, the rewrite reads THROUGH the mapping (every
-    // group under its logical name — a raw multi-footer read would
-    // silently NULL the renamed column across mixed physical schemas) and
-    // stages every row under the NEW name. The staged files sit outside
-    // every rename's fileKeys scope, so after the fold no mapping applies
-    // and the table's physical schema is uniform again — the escape hatch
-    // commitDelete/commitMerge name in their refusal. Zone-map columns
-    // follow the mapping (the manifest's stats header addresses the
-    // file's physical names, which post-fold are the logical ones).
-    val renamed = activeRenames(spark, dir, prev, entries)
-    val widened = activeWidens(spark, dir, prev, entries)
-    val dropped = activeDrops(spark, dir, prev, entries)
-    // an explicit override is already in LOGICAL names — only carried
-    // declarations need the rename-chain fold
+    // OPTIMIZE is the FOLD of every schema change still active on live
+    // files: the rewrite reads THROUGH the mappings (every group under its
+    // logical names and types — a raw multi-footer read would silently
+    // NULL a renamed column across mixed physical schemas) and through the
+    // deletion vector (readVersion anti-joins it), so the staged files
+    // hold only live rows under the logical schema. They sit outside every
+    // change's fileKeys scope, so after the fold no mapping applies, the
+    // physical schema is uniform again, and OPTIMIZE publishes with no
+    // read-time debt — the escape hatch the rewrite commits name in their
+    // refusal. Zone-map columns follow the rename chain (the manifest's
+    // stats header addresses the file's physical names, which post-fold
+    // are the logical ones); an explicit override is already in LOGICAL
+    // names.
+    val log = schemaLog(spark, dir).filter(_.version <= prev)
+    val active = activeChanges(log, prev, entries)
     val foldedStats =
-      if (renamed.isEmpty || statsColsOverride.isDefined) statsCols
-      else statsCols.map(c =>
-        renameLog(spark, dir).filter(_.version <= prev).foldLeft(c)((n, r) =>
-          if (r.from == n) r.to else n))
-    // the rewrite reads through EVERY mapping: the rename chain (fold,
-    // above), active type widenings (the evolved read casts them — the
-    // staged files are physically wide, so the widen's fileKeys scope no
-    // longer applies), and the deletion vector (readVersion anti-joins
-    // it) — the rewritten files hold only live rows under their logical
-    // names and types, so OPTIMIZE publishes with no read-time debt
-    val all =
-      if (renamed.isEmpty && widened.isEmpty && dropped.isEmpty) readVersion(spark, dir, prev)
-      else readVersionEvolved(spark, dir, prev)
+      if (!active.exists(_.kind == "rename") || statsColsOverride.isDefined) statsCols
+      else statsCols.map(c => log.foldLeft(c) {
+        case (n, r: ColumnRename) if r.from == n => r.to
+        case (n, _)                             => n
+      })
+    val all = readThrough(spark, dir, prev, entries, active)
     statsColsOverride.foreach(_.foreach(c =>
       require(all.columns.contains(c),
         s"statsColsOverride names '$c', absent from $dir's logical schema " +
@@ -1134,8 +1088,9 @@ object Snapshots {
       rows: DataFrame,
       approxRows: Long = -1L): Path = {
     val stage = new Path(dir, s"changes/stage-${java.util.UUID.randomUUID()}")
-    // When the caller knows the feed's row count (the merge paths do —
-    // it is bounded by 2x the change-key count), pack the record into
+    // When the caller knows a bound on the feed's row count (the merge
+    // paths do — 2x the change-key count; the delete paths do — the
+    // touched files' manifest row counts), pack the record into
     // row-count-derived files instead of inheriting the union's task
     // layout (touched-file scan partitions + the change batch's) — a
     // CDC-sized feed otherwise lands as ~40 near-empty files whose
@@ -1162,6 +1117,13 @@ object Snapshots {
         .write.mode("overwrite").parquet(stage.toString)
     stage
   }
+
+  /** Summed manifest row counts of `entries` (an upper bound on the rows a
+    * delete over them removes), -1 (unknown) when any entry predates the
+    * `#rows=` header.
+    */
+  private def manifestRows(entries: Seq[ManifestEntry]): Long =
+    if (entries.forall(_.rows.isDefined)) entries.flatMap(_.rows).sum else -1L
 
   private def publishChanges(spark: SparkSession, dir: String, stage: Path, v: Int): Unit = {
     val dst = new Path(dir, s"changes/v$v")
@@ -1240,29 +1202,6 @@ object Snapshots {
     */
   private def fileKey(p: String): String = new Path(p).toUri.getPath
 
-  /** Retention pass — the physical-erasure half every manifest-based
-    * format splits off from its logical operations: delete every data
-    * file referenced by NO surviving version (>= `keepFrom`) and drop the
-    * expired manifests. A file carried forward by appends survives as
-    * long as ANY surviving version lists it — reference counting is by
-    * file, not by the commit that wrote it. After vacuum, time travel
-    * before `keepFrom` is gone (that is the point: commitDelete's doomed
-    * rows stop being readable ANYWHERE once the versions holding them
-    * expire), and every surviving version still reads bit-identically
-    * (SnapshotsSpec pins both). Returns the number of data files deleted.
-    *
-    * CONCURRENCY: an in-flight commit's staged files are not yet
-    * referenced by any manifest, so a vacuum racing that commit would
-    * eat them as orphans and the commit would publish a torn snapshot.
-    * `retainMs` is the guard (the Delta/Iceberg retention pattern): only
-    * unreferenced files whose modification time is older than `retainMs`
-    * are deleted, so any commit that stages and publishes within the
-    * retention window is safe. The default 0 deletes ALL orphans and is
-    * only safe when the caller holds exclusive write access to the table
-    * (the single-writer deployments the specs and gates model); set
-    * `retainMs` above the longest plausible stage→publish latency
-    * otherwise.
-    */
   /** DRY-RUN of [[vacuum]]'s data-file retention pass — the `VACUUM ...
     * DRY RUN` every lakehouse exposes, because an operator wants to see
     * the blast radius (file count + bytes reclaimed) before an
@@ -1303,6 +1242,29 @@ object Snapshots {
     (n, bytes)
   }
 
+  /** Retention pass — the physical-erasure half every manifest-based
+    * format splits off from its logical operations: delete every data
+    * file referenced by NO surviving version (>= `keepFrom`) and drop the
+    * expired manifests. A file carried forward by appends survives as
+    * long as ANY surviving version lists it — reference counting is by
+    * file, not by the commit that wrote it. After vacuum, time travel
+    * before `keepFrom` is gone (that is the point: commitDelete's doomed
+    * rows stop being readable ANYWHERE once the versions holding them
+    * expire), and every surviving version still reads bit-identically
+    * (SnapshotsSpec pins both). Returns the number of data files deleted.
+    *
+    * CONCURRENCY: an in-flight commit's staged files are not yet
+    * referenced by any manifest, so a vacuum racing that commit would
+    * eat them as orphans and the commit would publish a torn snapshot.
+    * `retainMs` is the guard (the Delta/Iceberg retention pattern): only
+    * unreferenced files whose modification time is older than `retainMs`
+    * are deleted, so any commit that stages and publishes within the
+    * retention window is safe. The default 0 deletes ALL orphans and is
+    * only safe when the caller holds exclusive write access to the table
+    * (the single-writer deployments the specs and gates model); set
+    * `retainMs` above the longest plausible stage→publish latency
+    * otherwise.
+    */
   def vacuum(spark: SparkSession, dir: String, keepFrom: Int, retainMs: Long = 0L): Int = {
     val latest = latestVersion(spark, dir)
     require(keepFrom >= 1 && keepFrom <= latest, s"keepFrom $keepFrom out of [1, $latest]")
@@ -1386,35 +1348,16 @@ object Snapshots {
           && st.getModificationTime <= cutoffMs)
           f.delete(st.getPath, false)
       }
-    // PROVABLY dead rename entries (their claimed version's manifest
-    // exists and belongs to another commit) are reclaimed BEFORE the
-    // manifests proving them dead can be deleted below — after which a
-    // surviving entry with a missing manifest is always a validated one
-    // (the renameEntryLive contract). Entries whose version is still
-    // unpublished are left alone: an in-flight rename may be about to
+    // PROVABLY dead schema-change entries (their claimed version's
+    // manifest exists and belongs to another commit) are reclaimed BEFORE
+    // the manifests proving them dead can be deleted below — after which
+    // a surviving entry with a missing manifest is always a validated one
+    // (the changeLive contract). Entries whose version is still
+    // unpublished are left alone: an in-flight change may be about to
     // publish them (it rolls its own entry back on a lost race).
-    rawRenameEntries(spark, dir).foreach { r =>
-      val mf = new Path(manifestDir(dir), s"v${r.version}.list")
-      val provablyDead = r.version <= latest && f.exists(mf) &&
-        !(commitOp(spark, dir, r.version).contains("rename") &&
-          renameSeqOf(spark, dir, r.version).contains(r.seq))
-      if (provablyDead) f.delete(new Path(schemaDir(dir), s"rename-${r.seq}.list"), false)
-    }
-    // widen entries follow the identical liveness protocol
-    rawWidenEntries(spark, dir).foreach { w =>
-      val mf = new Path(manifestDir(dir), s"v${w.version}.list")
-      val provablyDead = w.version <= latest && f.exists(mf) &&
-        !(commitOp(spark, dir, w.version).contains("widen") &&
-          widenSeqOf(spark, dir, w.version).contains(w.seq))
-      if (provablyDead) f.delete(new Path(schemaDir(dir), s"widen-${w.seq}.list"), false)
-    }
-    // drop entries too
-    rawDropEntries(spark, dir).foreach { d =>
-      val mf = new Path(manifestDir(dir), s"v${d.version}.list")
-      val provablyDead = d.version <= latest && f.exists(mf) &&
-        !(commitOp(spark, dir, d.version).contains("drop") &&
-          dropSeqOf(spark, dir, d.version).contains(d.seq))
-      if (provablyDead) f.delete(new Path(schemaDir(dir), s"drop-${d.seq}.list"), false)
+    rawChanges(spark, dir).foreach { c =>
+      if (c.version <= latest && !changeLive(spark, dir, latest, c))
+        f.delete(schemaEntry(dir, c.kind, c.seq), false)
     }
     (1 until keepFrom).filterNot(pinned).foreach(v =>
       f.delete(new Path(manifestDir(dir), s"v$v.list"), false))
@@ -1579,29 +1522,232 @@ object Snapshots {
     else readFilesDv(spark, dir, version, paths).filter(col(column) === lit(value))
   }
 
-  // ---- Named refs (tags) -------------------------------------------------
-
-  // ---- Column rename (metadata-only schema mapping) -----------------------
+  // ---- Metadata-only schema changes (rename / widen / drop) ---------------
 
   private def schemaDir(dir: String) = new Path(dir, "_schema")
-  private val RenameFileRe = "rename-(\\d+)\\.list".r
-  private val WidenFileRe = "widen-(\\d+)\\.list".r
-  private val DropFileRe = "drop-(\\d+)\\.list".r
 
-  /** One recorded rename: applied at table `version`, mapping physical
-    * column `from` (as written in the files staged BEFORE the rename) to
-    * logical name `to`, scoped to exactly `fileKeys` — the files that
-    * carried the old physical name when the rename committed. Scoping by
-    * explicit file set (not "every file in manifests ≤ version") keeps
-    * the mapping correct after later OPTIMIZE/MERGE rewrites drop some
-    * of those files, and survives vacuuming of the rename-era manifests.
+  /** The schema-change kinds, in the evolved read's application order. A
+    * kind names its `_schema/<kind>-<seq>.list` entries (seq spaces are
+    * per kind), the op of the manifest that publishes one, and that
+    * manifest's `#<kind>seq=` header.
+    */
+  private val SchemaKinds = Seq("rename", "widen", "drop")
+  private val SchemaEntryRe = s"(${SchemaKinds.mkString("|")})-(\\d+)\\.list".r
+
+  private def schemaEntry(dir: String, kind: String, seq: Int) =
+    new Path(schemaDir(dir), s"$kind-$seq.list")
+
+  private def seqHeader(kind: String) = s"#${kind}seq="
+
+  /** One recorded metadata-only schema change: applied at table
+    * `version`, scoped to exactly `fileKeys` — the files that carried the
+    * old physical schema when the change committed. Scoping by explicit
+    * file set (not "every file in manifests ≤ version") keeps the mapping
+    * correct after later OPTIMIZE/MERGE rewrites drop some of those
+    * files, and survives vacuuming of the change-era manifests.
+    */
+  sealed trait SchemaChange {
+    def seq: Int
+    def version: Int
+    def fileKeys: Set[String]
+    /** Entry-file prefix, manifest op and `#<kind>seq=` header name. */
+    def kind: String
+    /** How a refusal names this entry, and what a raw rewrite would break. */
+    def describe: String
+    def hazard: String
+    /** The change applied to a scan of files it scopes. */
+    def applyTo(df: DataFrame): DataFrame
+  }
+
+  /** Physical column `from`, as written in the files staged BEFORE the
+    * rename, reads as logical name `to`.
     */
   final case class ColumnRename(seq: Int, version: Int, from: String, to: String, fileKeys: Set[String])
+      extends SchemaChange {
+    def kind = "rename"
+    def describe = s"column rename '$from'->'$to'"
+    def hazard = "silently NULL the renamed column across mixed physical schemas"
+    def applyTo(df: DataFrame) = if (df.columns.contains(from)) df.withColumnRenamed(from, to) else df
+  }
+
+  /** `column`'s physical type `from` reads cast to `to`. */
+  final case class ColumnWiden(
+      seq: Int, version: Int, column: String, from: String, to: String, fileKeys: Set[String])
+      extends SchemaChange {
+    def kind = "widen"
+    def describe = s"type widening '$column' $from->$to"
+    def hazard = "read mixed physical types"
+    def applyTo(df: DataFrame) =
+      if (df.columns.contains(column)) df.withColumn(column, col(column).cast(to)) else df
+  }
+
+  /** `column`, still physically present, is invisible to readers. */
+  final case class ColumnDrop(seq: Int, version: Int, column: String, fileKeys: Set[String])
+      extends SchemaChange {
+    def kind = "drop"
+    def describe = s"column drop '$column'"
+    def hazard = "resurrect the dropped column as NULLs across mixed physical schemas"
+    def applyTo(df: DataFrame) = if (df.columns.contains(column)) df.drop(column) else df
+  }
+
+  /** Every parseable schema-change entry, live or not (CRC-checked), in
+    * application order: renames, then widens, then drops, each by seq.
+    */
+  private def rawChanges(spark: SparkSession, dir: String): Seq[SchemaChange] = {
+    val sd = schemaDir(dir)
+    val f = fs(spark, sd)
+    if (!f.exists(sd)) Nil
+    else
+      f.listStatus(sd)
+        .flatMap { st =>
+          st.getPath.getName match {
+            case SchemaEntryRe(kind, seq) =>
+              val in = f.open(st.getPath)
+              val content =
+                try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+                finally in.close()
+              require(content.startsWith(CrcHeader), s"$kind entry $seq on $dir is malformed")
+              val nl = content.indexOf('\n')
+              val declared = content.substring(CrcHeader.length, nl).toLong
+              val body = content.substring(nl + 1)
+              require(crc32Of(body) == declared,
+                s"$kind entry $seq on $dir failed its CRC check: metadata corruption")
+              val lines = body.linesIterator.toList
+              def hdr(k: String) =
+                lines.find(_.startsWith(s"#$k=")).map(_.drop(k.length + 2)).getOrElse(
+                  throw new IllegalArgumentException(s"$kind entry $seq on $dir lacks #$k="))
+              val (s, v, keys) = (seq.toInt, hdr("version").toInt, lines.filterNot(_.startsWith("#")).toSet)
+              Some(kind match {
+                case "rename" => ColumnRename(s, v, hdr("from"), hdr("to"), keys)
+                case "widen"  => ColumnWiden(s, v, hdr("column"), hdr("from"), hdr("to"), keys)
+                case _        => ColumnDrop(s, v, hdr("column"), keys)
+              })
+            case _ => None
+          }
+        }
+        .toSeq
+        .sortBy(c => (SchemaKinds.indexOf(c.kind), c.seq))
+  }
+
+  /** Whether a recorded entry is LIVE on a table whose head is `latest` —
+    * its version's manifest is an op=<kind> commit naming exactly this
+    * entry's seq. An entry whose version is not yet published is pending
+    * (a crashed change's claim or an in-flight one) and must not apply;
+    * an entry whose version's manifest exists with a different op/seq is
+    * provably DEAD (the claimed version went to another commit). A
+    * validated entry whose manifest was later vacuumed stays live:
+    * [[vacuum]] deletes the dead entries FIRST, while the manifests
+    * proving them dead still exist, so a surviving entry with a missing
+    * manifest was necessarily validated.
+    */
+  private def changeLive(spark: SparkSession, dir: String, latest: Int, c: SchemaChange): Boolean = {
+    if (c.version > latest) return false
+    val mf = new Path(manifestDir(dir), s"v${c.version}.list")
+    if (!fs(spark, mf).exists(mf)) return true // vacuumed after validation
+    val lines = manifestLines(spark, dir, c.version)
+    def hdr(h: String) = lines.find(_.startsWith(h)).map(_.drop(h.length))
+    hdr(OpHeader).contains(c.kind) && hdr(seqHeader(c.kind)).map(_.toInt).contains(c.seq)
+  }
+
+  /** The LIVE recorded schema changes in application order: raw entries
+    * filtered through [[changeLive]] — a claimed-but-never-published (or
+    * published-to-another-commit) entry never reaches a reader.
+    */
+  def schemaLog(spark: SparkSession, dir: String): Seq[SchemaChange] = {
+    val latest = latestVersion(spark, dir)
+    rawChanges(spark, dir).filter(changeLive(spark, dir, latest, _))
+  }
+
+  /** The changes of `log` still ACTIVE at `version` on `entries` —
+    * recorded at or before it, with some live file physically written
+    * under the pre-change schema.
+    */
+  private def activeChanges(
+      log: Seq[SchemaChange],
+      version: Int,
+      entries: Seq[ManifestEntry]): Seq[SchemaChange] = {
+    val live = entries.map(e => fileKey(e.path))
+    log.filter(c => c.version <= version && live.exists(c.fileKeys.contains))
+  }
+
+  /** Refuse `op` while a change of one of `kinds` is active on `entries`.
+    * The copy-on-write and merge-on-read rewrites refuse on every kind:
+    * their raw parquet reads would pick one generation's footer (NULLing
+    * a renamed or dropped column, mixing int/long), and their staged
+    * rewrites escape the change's fileKeys scope, resurrecting the old
+    * physical schema for post-change readers. The schema-change commits
+    * refuse on the OTHER kinds, so the OPTIMIZE fold and these refusals
+    * reason about one mapping kind at a time. [[commitOptimize]] is the
+    * fold: it reads THROUGH every mapping and rewrites every file under
+    * the logical schema, after which nothing is active and the refused
+    * commits are legal again.
+    */
+  private def requireNoActiveChange(
+      spark: SparkSession,
+      dir: String,
+      version: Int,
+      entries: Seq[ManifestEntry],
+      op: String,
+      kinds: Seq[String]): Unit = {
+    val active = activeChanges(schemaLog(spark, dir), version, entries).filter(c => kinds.contains(c.kind))
+    require(active.isEmpty,
+      s"$op on $dir refused: schema changes ${active.map(_.describe).mkString(", ")} are still " +
+        s"active on live files (a raw rewrite would ${active.map(_.hazard).distinct.mkString("; ")}) — " +
+        "run commitOptimize first to fold them into a uniform physical schema")
+  }
+
+  /** Publish a `kind` schema change over the files of `entries0` as
+    * version v0+1, after the verb's own validation. ATOMICITY (the r11
+    * two-step hazard): the `_schema/<kind>-<seq>.list` entry (`#version=`,
+    * then `fields` as `#k=v` lines, then the file keys) is claimed FIRST
+    * but is INERT until the op=<kind> manifest naming its seq publishes —
+    * [[changeLive]] only applies an entry whose version's manifest is that
+    * op with a matching `#<kind>seq=` header, so the version and the
+    * mapping become visible in ONE atomic step (the manifest claim). A
+    * lost entry claim takes the next seq. A crash between the two steps
+    * leaves a dead entry no reader ever applies (a commit landing at the
+    * same version makes it provably dead; vacuum reclaims dead entries
+    * before it deletes the manifests that prove them dead). A lost
+    * manifest publish rolls the claimed entry back and aborts — rerun
+    * against the new latest. The change IS a table version (op=<kind>,
+    * identical file list): readers of versions BELOW it keep the old
+    * schema forever (schema time travel), and the history shows it.
+    */
+  private def commitSchemaChange(
+      spark: SparkSession,
+      dir: String,
+      v0: Int,
+      statsCols0: Seq[String],
+      entries0: Seq[ManifestEntry],
+      kind: String,
+      fields: (String, String)*): Int = {
+    val v = v0 + 1
+    val sd = schemaDir(dir)
+    val f = fs(spark, sd)
+    f.mkdirs(sd)
+    val payload = s"#version=$v\n" + fields.map { case (k, x) => s"#$k=$x\n" }.mkString +
+      entries0.map(e => fileKey(e.path)).mkString("", "\n", "\n")
+    val tmp = new Path(sd, s"$kind.list.tmp-${java.util.UUID.randomUUID()}")
+    val out = f.create(tmp, true)
+    try out.write((s"$CrcHeader${crc32Of(payload)}\n" + payload).getBytes(StandardCharsets.UTF_8))
+    finally out.close()
+    var seq = rawChanges(spark, dir).filter(_.kind == kind).map(_.seq).foldLeft(0)(math.max) + 1
+    // lost a race to a concurrent change of this kind: take the next slot
+    while (!claimExclusive(f, tmp, schemaEntry(dir, kind, seq))) seq += 1
+    f.delete(tmp, false)
+    if (!tryPublish(spark, dir, v, statsCols0, entries0, None, kind, s"${seqHeader(kind)}$seq\n")) {
+      f.delete(schemaEntry(dir, kind, seq), false) // roll back the inert entry
+      throw new IllegalArgumentException(
+        s"commit of v$v lost the publish race to a concurrent writer; " +
+          "re-run the operation against the new latest snapshot")
+    }
+    v
+  }
 
   /** Metadata-only COLUMN RENAME — the Delta/Iceberg column-mapping
     * idea in file-set form: no data file is rewritten; a rename entry
     * (old name, new name, the CURRENT snapshot's file set) publishes
-    * atomically under `_schema/`, and [[readVersionRenamed]] applies it
+    * atomically under `_schema/`, and [[readVersionEvolved]] applies it
     * at read time to exactly those files. Files staged AFTER the rename
     * are written with the new logical name and need no mapping; a read
     * of a version BEFORE the rename sees the old name, forever — schema
@@ -1629,212 +1775,66 @@ object Snapshots {
     // anti-join) — fold deletes first, then rename
     requireNoLiveDv(spark, dir, v0, "RENAME")
     // validate against the current LOGICAL schema (prior renames applied)
-    val cur = readVersionRenamed(spark, dir, v0).schema.fieldNames.toSet
+    val cur = readVersionEvolved(spark, dir, v0).schema.fieldNames.toSet
     require(cur.contains(from), s"column '$from' does not exist in snapshot v$v0 of $dir (have: $cur)")
     require(!cur.contains(to), s"column '$to' already exists in snapshot v$v0 of $dir")
-    // ATOMICITY (the r11 two-step hazard): the mapping entry is claimed
-    // FIRST, but it is INERT until the op=rename manifest that names its
-    // seq publishes — renameLog only applies an entry whose version's
-    // manifest is op=rename with a matching #renameseq header, so the
-    // version and the mapping become visible in ONE atomic step (the
-    // manifest claim). A crash between the two steps leaves a dead entry
-    // no reader ever applies (an append landing at the same version makes
-    // it provably dead; vacuum reclaims dead entries before it deletes
-    // the manifests that prove them dead). A lost manifest publish rolls
-    // the claimed entry back and aborts — rerun against the new latest.
     val (statsCols0, entries0) = manifest(spark, dir, v0)
-    // a rename and a widening must not be simultaneously active on live
-    // files (the grouped read handles it, but the OPTIMIZE fold and the
-    // rewrite refusals reason about ONE mapping kind at a time) — fold
-    // first, then evolve again
-    requireNoActiveWiden(spark, dir, v0, entries0, "RENAME")
-    requireNoActiveDrop(spark, dir, v0, entries0, "RENAME")
-    val v = v0 + 1
-    val files = entries0.map(e => fileKey(e.path))
-    val sd = schemaDir(dir)
-    val f = fs(spark, sd)
-    f.mkdirs(sd)
-    var seq = rawRenameEntries(spark, dir).map(_.seq).foldLeft(0)(math.max) + 1
-    var claimed = false
-    while (!claimed) {
-      val payload = s"#version=$v\n#from=$from\n#to=$to\n" + files.mkString("", "\n", "\n")
-      val tmp = new Path(sd, s"rename-$seq.list.tmp-${java.util.UUID.randomUUID()}")
-      val out = f.create(tmp, true)
-      try out.write((s"$CrcHeader${crc32Of(payload)}\n" + payload).getBytes(StandardCharsets.UTF_8))
-      finally out.close()
-      claimed = claimExclusive(f, tmp, new Path(sd, s"rename-$seq.list"))
-      f.delete(tmp, false)
-      if (!claimed) seq += 1 // lost a race to a concurrent rename: take the next slot
-    }
-    // the rename IS a table version (op=rename, identical file list):
-    // readers of versions BELOW it keep the old name forever (schema
-    // time travel), and the table history shows the schema change
-    if (!tryPublish(spark, dir, v, statsCols0, entries0, None, "rename",
-        s"$RenameSeqHeader$seq\n")) {
-      f.delete(new Path(sd, s"rename-$seq.list"), false) // roll back the inert entry
-      throw new IllegalArgumentException(
-        s"commit of v$v lost the publish race to a concurrent writer; " +
-          "re-run the operation against the new latest snapshot")
-    }
-    v
+    requireNoActiveChange(spark, dir, v0, entries0, "RENAME", Seq("widen", "drop"))
+    commitSchemaChange(spark, dir, v0, statsCols0, entries0, "rename", "from" -> from, "to" -> to)
   }
 
-  /** The `#renameseq=` header of `version`'s manifest, None when absent. */
-  private def renameSeqOf(spark: SparkSession, dir: String, version: Int): Option[Int] =
-    manifestLines(spark, dir, version)
-      .find(_.startsWith(RenameSeqHeader))
-      .map(_.drop(RenameSeqHeader.length).toInt)
-
-  /** Whether a recorded rename entry is LIVE — its version's manifest is
-    * an op=rename commit naming exactly this entry's seq. An entry whose
-    * version is not yet published is pending (a crashed rename's claim or
-    * an in-flight one) and must not apply; an entry whose version's
-    * manifest exists with a different op/seq is provably DEAD (the
-    * claimed version went to another commit). A validated entry whose
-    * manifest was later vacuumed stays live: [[vacuum]] deletes the dead
-    * entries FIRST, while the manifests proving them dead still exist, so
-    * a surviving entry with a missing manifest was necessarily validated.
-    */
-  private def renameEntryLive(spark: SparkSession, dir: String, r: ColumnRename): Boolean = {
-    if (r.version > latestVersion(spark, dir)) return false
-    val mf = new Path(manifestDir(dir), s"v${r.version}.list")
-    if (!fs(spark, mf).exists(mf)) return true // vacuumed after validation
-    commitOp(spark, dir, r.version).contains("rename") &&
-    renameSeqOf(spark, dir, r.version).contains(r.seq)
-  }
-
-  /** The LIVE recorded renames in application order: raw entries filtered
-    * through [[renameEntryLive]] — a claimed-but-never-published (or
-    * published-to-another-commit) entry never reaches a reader.
-    */
-  def renameLog(spark: SparkSession, dir: String): Seq[ColumnRename] =
-    rawRenameEntries(spark, dir).filter(renameEntryLive(spark, dir, _))
-
-  /** Every parseable rename entry, live or not (CRC-checked). */
-  private def rawRenameEntries(spark: SparkSession, dir: String): Seq[ColumnRename] = {
-    val sd = schemaDir(dir)
-    val f = fs(spark, sd)
-    if (!f.exists(sd)) Nil
-    else
-      f.listStatus(sd)
-        .flatMap { st =>
-          st.getPath.getName match {
-            case RenameFileRe(seq) =>
-              val in = f.open(st.getPath)
-              val content =
-                try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-                finally in.close()
-              require(content.startsWith(CrcHeader), s"rename entry $seq on $dir is malformed")
-              val nl = content.indexOf('\n')
-              val declared = content.substring(CrcHeader.length, nl).toLong
-              val body = content.substring(nl + 1)
-              require(crc32Of(body) == declared,
-                s"rename entry $seq on $dir failed its CRC check: metadata corruption")
-              val lines = body.linesIterator.toList
-              def hdr(k: String) =
-                lines.find(_.startsWith(s"#$k=")).map(_.drop(k.length + 2)).getOrElse(
-                  throw new IllegalArgumentException(s"rename entry $seq on $dir lacks #$k="))
-              Some(ColumnRename(
-                seq.toInt,
-                hdr("version").toInt,
-                hdr("from"),
-                hdr("to"),
-                lines.filterNot(_.startsWith("#")).toSet))
-            case _ => None
-          }
-        }
-        .sortBy(_.seq)
-        .toSeq
-  }
-
-  /** Read `version` with the recorded column renames applied — the
-    * rename-aware twin of [[readVersion]]. Files are grouped by WHICH
-    * renames apply to them (a handful of generations, never O(files)
-    * groups in practice — each rename splits the set once), each group
-    * scans with its chain of `withColumnRenamed` (plan-only — the
-    * parquet scan and its pruning/pushdown are untouched), and the
-    * groups union BY NAME, so post-rename readers see one coherent
-    * logical schema over physically mixed files. Renames recorded at a
-    * version AFTER the one being read do not apply — reading v1 of a
-    * table renamed at v2 still sees the old name (schema time travel).
-    */
-  def readVersionRenamed(spark: SparkSession, dir: String, version: Int): DataFrame =
-    readVersionEvolved(spark, dir, version)
-
-  /** Read `version` with EVERY recorded metadata-only schema evolution
-    * applied — column renames AND type widenings. Files are grouped by
-    * WHICH evolution entries apply to them (a handful of generations,
-    * never O(files) groups — each entry splits the set once), each
-    * group scans with its chain of `withColumnRenamed` / `cast`
-    * (plan-only — the parquet scan and its pruning/pushdown are
-    * untouched; an int→long cast on top of the scan is a projection,
-    * not a rewrite), and the groups union BY NAME, so readers see one
-    * coherent logical schema over physically mixed files. Entries
-    * recorded at a version AFTER the one being read do not apply —
-    * reading v1 of a table widened at v2 still sees the narrow type
-    * (schema time travel, the x11/x21 discipline). The commit-time
-    * mutual refusal ([[commitRename]] vs [[commitWiden]]) guarantees no
-    * single version's file set carries BOTH mapping kinds, but the
-    * grouped read handles the general case anyway — it is the one read
-    * path for every evolved table.
+  /** Read `version` with EVERY recorded metadata-only schema change
+    * applied — column renames, then type widenings, then column drops,
+    * each in seq order. Files are grouped by WHICH entries apply to them
+    * (a handful of generations, never O(files) groups — each entry splits
+    * the set once), each group scans with its chain of
+    * `withColumnRenamed` / `cast` / `drop` (plan-only — the parquet scan
+    * and its pruning/pushdown are untouched; an int→long cast on top of
+    * the scan is a projection, not a rewrite), and the groups union BY
+    * NAME, so readers see one coherent logical schema over physically
+    * mixed files. Entries recorded at a version AFTER the one being read
+    * do not apply — reading v1 of a table widened at v2 still sees the
+    * narrow type (schema time travel, the x11/x21 discipline). The
+    * commit-time mutual refusal guarantees no single version's file set
+    * carries two mapping kinds, but the grouped read handles the general
+    * case anyway — it is the one read path for every evolved table.
     */
   def readVersionEvolved(spark: SparkSession, dir: String, version: Int): DataFrame = {
-    val renames = renameLog(spark, dir).filter(_.version <= version)
-    val widens = widenLog(spark, dir).filter(_.version <= version)
-    val drops = dropLog(spark, dir).filter(_.version <= version)
     val entries = manifest(spark, dir, version)._2
-    val files = entries.map(_.path)
-    // when no recorded evolution touches any live file (none recorded,
-    // or all folded by OPTIMIZE), the evolved read IS the plain
-    // (deletion-vector-aware) read; the grouped path below never
-    // coexists with a live DV (the evolution commits enforce it)
-    val applicable =
-      renames.exists(r => files.exists(p => r.fileKeys.contains(fileKey(p)))) ||
-        widens.exists(w => files.exists(p => w.fileKeys.contains(fileKey(p)))) ||
-        drops.exists(d => files.exists(p => d.fileKeys.contains(fileKey(p))))
-    if (!applicable) readVersion(spark, dir, version)
+    readThrough(spark, dir, version, entries, activeChanges(schemaLog(spark, dir), version, entries))
+  }
+
+  /** `version` (listing `entries`) read through its `active` schema
+    * changes. With none active (none recorded, or all folded by
+    * OPTIMIZE) this IS the plain deletion-vector-aware read; the grouped
+    * path never coexists with a live DV (the schema-change commits
+    * enforce it).
+    */
+  private def readThrough(
+      spark: SparkSession,
+      dir: String,
+      version: Int,
+      entries: Seq[ManifestEntry],
+      active: Seq[SchemaChange]): DataFrame =
+    if (active.isEmpty) readVersion(spark, dir, version)
     else {
       requireNoLiveDv(spark, dir, version, "EVOLVED READ")
-      val groups = files.groupBy(p =>
-        (renames.map(_.fileKeys.contains(fileKey(p))),
-          widens.map(_.fileKeys.contains(fileKey(p))),
-          drops.map(_.fileKeys.contains(fileKey(p)))))
-      groups.values.toSeq
-        .map { fsGroup =>
-          val base = spark.read.parquet(fsGroup: _*)
-          val key = fileKey(fsGroup.head)
-          val renamed = renames.foldLeft(base) {
-            case (df, r) if r.fileKeys.contains(key) && df.columns.contains(r.from) =>
-              df.withColumnRenamed(r.from, r.to)
-            case (df, _) => df
-          }
-          val widened = widens.foldLeft(renamed) {
-            case (df, w) if w.fileKeys.contains(key) && df.columns.contains(w.column) =>
-              df.withColumn(w.column, col(w.column).cast(w.to))
-            case (df, _) => df
-          }
-          drops.foldLeft(widened) {
-            case (df, d) if d.fileKeys.contains(key) && df.columns.contains(d.column) =>
-              df.drop(d.column)
-            case (df, _) => df
-          }
+      entries
+        .map(_.path)
+        .groupBy(p => active.map(_.fileKeys.contains(fileKey(p))))
+        .values
+        .toSeq
+        .map { group =>
+          val key = fileKey(group.head)
+          active.filter(_.fileKeys.contains(key))
+            .foldLeft(spark.read.parquet(group: _*))((df, c) => c.applyTo(df))
         }
         .reduce(_.unionByName(_))
     }
-  }
 
-  /** Read the latest snapshot with renames applied. */
-  def readLatestRenamed(spark: SparkSession, dir: String): DataFrame =
-    readVersionRenamed(spark, dir, latestVersion(spark, dir))
-
-  // ---- Type widening (metadata-only schema evolution) ---------------------
-
-  /** A recorded type widening: `column`'s physical type in `fileKeys`
-    * is `from`; readers of any version at/after `version` see it cast
-    * to `to`. Scoped to the file set exactly like [[ColumnRename]].
-    */
-  final case class ColumnWiden(
-      seq: Int, version: Int, column: String, from: String, to: String, fileKeys: Set[String])
+  /** Read the latest snapshot with every recorded schema change applied. */
+  def readLatestEvolved(spark: SparkSession, dir: String): DataFrame =
+    readVersionEvolved(spark, dir, latestVersion(spark, dir))
 
   /** The widenings this implementation admits: value-preserving casts
     * whose wide type can also hold every future append (the
@@ -1854,15 +1854,10 @@ object Snapshots {
     * BEFORE the widen sees the narrow type, forever (schema time
     * travel). Returns the widen's table version.
     *
-    * The same liveness protocol as renames makes the two-step commit
-    * atomic: the `_schema/widen-N.list` entry is claimed FIRST but is
-    * INERT until the op=widen manifest naming its seq publishes; a
-    * crash between the steps leaves a dead entry no reader applies, and
-    * [[vacuum]] reclaims provably dead ones. The copy-on-write commits
-    * (delete/merge/MOR delete) REFUSE while a widen mapping is active
-    * on live files — their raw multi-footer reads would fail (or
-    * silently coerce) across int/long generations — and
-    * [[commitOptimize]] is the FOLD: it reads through the mapping and
+    * The copy-on-write commits (delete/merge/MOR delete) REFUSE while a
+    * widen mapping is active on live files — their raw multi-footer
+    * reads would fail (or silently coerce) across int/long generations —
+    * and [[commitOptimize]] is the FOLD: it reads through the mapping and
     * rewrites every file under the wide type. Renames and widens
     * mutually refuse while the other is active on live files; fold
     * first, then evolve again.
@@ -1872,8 +1867,7 @@ object Snapshots {
     require(v0 >= 1, s"cannot widen a column of an empty table at $dir")
     requireNoLiveDv(spark, dir, v0, "WIDEN")
     val (statsCols0, entries0) = manifest(spark, dir, v0)
-    requireNoActiveRename(spark, dir, v0, entries0, "WIDEN")
-    requireNoActiveDrop(spark, dir, v0, entries0, "WIDEN")
+    requireNoActiveChange(spark, dir, v0, entries0, "WIDEN", Seq("rename", "drop"))
     val cur = readVersionEvolved(spark, dir, v0).schema
     val field = cur.fields.find(_.name == column).getOrElse(
       throw new IllegalArgumentException(
@@ -1883,124 +1877,9 @@ object Snapshots {
     require(AllowedWidenings.contains((from, to)),
       s"widening '$column' from $from to $to is not value-preserving " +
         s"(allowed: ${AllowedWidenings.map { case (f, t) => s"$f->$t" }.mkString(", ")})")
-    val v = v0 + 1
-    val files = entries0.map(e => fileKey(e.path))
-    val sd = schemaDir(dir)
-    val f = fs(spark, sd)
-    f.mkdirs(sd)
-    var seq = rawWidenEntries(spark, dir).map(_.seq).foldLeft(0)(math.max) + 1
-    var claimed = false
-    while (!claimed) {
-      val payload = s"#version=$v\n#column=$column\n#from=$from\n#to=$to\n" +
-        files.mkString("", "\n", "\n")
-      val tmp = new Path(sd, s"widen-$seq.list.tmp-${java.util.UUID.randomUUID()}")
-      val out = f.create(tmp, true)
-      try out.write((s"$CrcHeader${crc32Of(payload)}\n" + payload).getBytes(StandardCharsets.UTF_8))
-      finally out.close()
-      claimed = claimExclusive(f, tmp, new Path(sd, s"widen-$seq.list"))
-      f.delete(tmp, false)
-      if (!claimed) seq += 1 // lost a race to a concurrent widen: take the next slot
-    }
-    if (!tryPublish(spark, dir, v, statsCols0, entries0, None, "widen",
-        s"$WidenSeqHeader$seq\n")) {
-      f.delete(new Path(sd, s"widen-$seq.list"), false) // roll back the inert entry
-      throw new IllegalArgumentException(
-        s"commit of v$v lost the publish race to a concurrent writer; " +
-          "re-run the operation against the new latest snapshot")
-    }
-    v
+    commitSchemaChange(spark, dir, v0, statsCols0, entries0, "widen",
+      "column" -> column, "from" -> from, "to" -> to)
   }
-
-  /** The `#widenseq=` header of `version`'s manifest, None when absent. */
-  private def widenSeqOf(spark: SparkSession, dir: String, version: Int): Option[Int] =
-    manifestLines(spark, dir, version)
-      .find(_.startsWith(WidenSeqHeader))
-      .map(_.drop(WidenSeqHeader.length).toInt)
-
-  /** [[renameEntryLive]]'s widen twin — same claim/publish liveness. */
-  private def widenEntryLive(spark: SparkSession, dir: String, w: ColumnWiden): Boolean = {
-    if (w.version > latestVersion(spark, dir)) return false
-    val mf = new Path(manifestDir(dir), s"v${w.version}.list")
-    if (!fs(spark, mf).exists(mf)) return true // vacuumed after validation
-    commitOp(spark, dir, w.version).contains("widen") &&
-    widenSeqOf(spark, dir, w.version).contains(w.seq)
-  }
-
-  /** The LIVE recorded widenings in application order. */
-  def widenLog(spark: SparkSession, dir: String): Seq[ColumnWiden] =
-    rawWidenEntries(spark, dir).filter(widenEntryLive(spark, dir, _))
-
-  /** Every parseable widen entry, live or not (CRC-checked). */
-  private def rawWidenEntries(spark: SparkSession, dir: String): Seq[ColumnWiden] = {
-    val sd = schemaDir(dir)
-    val f = fs(spark, sd)
-    if (!f.exists(sd)) Nil
-    else
-      f.listStatus(sd)
-        .flatMap { st =>
-          st.getPath.getName match {
-            case WidenFileRe(seq) =>
-              val in = f.open(st.getPath)
-              val content =
-                try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-                finally in.close()
-              require(content.startsWith(CrcHeader), s"widen entry $seq on $dir is malformed")
-              val nl = content.indexOf('\n')
-              val declared = content.substring(CrcHeader.length, nl).toLong
-              val body = content.substring(nl + 1)
-              require(crc32Of(body) == declared,
-                s"widen entry $seq on $dir failed its CRC check: metadata corruption")
-              val lines = body.linesIterator.toList
-              def hdr(k: String) =
-                lines.find(_.startsWith(s"#$k=")).map(_.drop(k.length + 2)).getOrElse(
-                  throw new IllegalArgumentException(s"widen entry $seq on $dir lacks #$k="))
-              Some(ColumnWiden(
-                seq.toInt,
-                hdr("version").toInt,
-                hdr("column"),
-                hdr("from"),
-                hdr("to"),
-                lines.filterNot(_.startsWith("#")).toSet))
-            case _ => None
-          }
-        }
-        .sortBy(_.seq)
-        .toSeq
-  }
-
-  /** Widenings whose mapping is still ACTIVE on `entries` — some live
-    * file is physically narrow. The rewrite commits and
-    * [[commitRename]] refuse while one is active (mirror of
-    * [[activeRenames]]).
-    */
-  private def activeWidens(
-      spark: SparkSession,
-      dir: String,
-      version: Int,
-      entries: Seq[ManifestEntry]): Seq[ColumnWiden] =
-    widenLog(spark, dir).filter(w =>
-      w.version <= version && entries.exists(e => w.fileKeys.contains(fileKey(e.path))))
-
-  private def requireNoActiveWiden(
-      spark: SparkSession,
-      dir: String,
-      version: Int,
-      entries: Seq[ManifestEntry],
-      op: String): Unit = {
-    val active = activeWidens(spark, dir, version, entries)
-    require(active.isEmpty,
-      s"$op on $dir refused: type widenings ${active.map(w => s"'${w.column}' ${w.from}->${w.to}").mkString(", ")} " +
-        "are still active on live files (a raw rewrite would read mixed physical types) — " +
-        "run commitOptimize first to fold the widening into a uniform physical schema")
-  }
-
-  // ---- Column drop (metadata-only schema evolution) -----------------------
-
-  /** A recorded column drop: `column` is physically present in
-    * `fileKeys` but invisible to readers of any version at/after
-    * `version`. Scoped to the file set exactly like [[ColumnRename]].
-    */
-  final case class ColumnDrop(seq: Int, version: Int, column: String, fileKeys: Set[String])
 
   /** Metadata-only DROP COLUMN — the third schema-evolution verb
     * (add = x3's append-time union, rename = x21, widen = x24) in the
@@ -2014,22 +1893,19 @@ object Snapshots {
     * the same erasure split every manifest-based format documents).
     * Returns the drop's table version.
     *
-    * Same liveness protocol and refusal discipline as rename/widen: the
-    * entry is inert until the op=drop manifest naming its seq
-    * publishes; rewrite commits refuse while a drop is active on live
-    * files (a raw rewrite would resurrect the column as NULLs across
-    * mixed physical schemas); OPTIMIZE is the fold; drops, renames, and
-    * widenings mutually refuse while another kind is active. A zone-map
-    * stats column refuses to drop (the manifest's range metadata
-    * addresses it) — re-declare stats first.
+    * Same refusal discipline as rename/widen: rewrite commits refuse
+    * while a drop is active on live files (a raw rewrite would resurrect
+    * the column as NULLs across mixed physical schemas); OPTIMIZE is the
+    * fold; drops, renames, and widenings mutually refuse while another
+    * kind is active. A zone-map stats column refuses to drop (the
+    * manifest's range metadata addresses it) — re-declare stats first.
     */
   def commitDropColumn(spark: SparkSession, dir: String, column: String): Int = {
     val v0 = latestVersion(spark, dir)
     require(v0 >= 1, s"cannot drop a column of an empty table at $dir")
     requireNoLiveDv(spark, dir, v0, "DROP COLUMN")
     val (statsCols0, entries0) = manifest(spark, dir, v0)
-    requireNoActiveRename(spark, dir, v0, entries0, "DROP COLUMN")
-    requireNoActiveWiden(spark, dir, v0, entries0, "DROP COLUMN")
+    requireNoActiveChange(spark, dir, v0, entries0, "DROP COLUMN", Seq("rename", "widen"))
     require(!statsCols0.contains(column),
       s"cannot drop zone-map stats column '$column' of $dir — its range metadata lives in " +
         "every manifest entry; rewrite with different statsCols first")
@@ -2037,109 +1913,10 @@ object Snapshots {
     require(cur.contains(column),
       s"column '$column' does not exist in snapshot v$v0 of $dir (have: ${cur.mkString(", ")})")
     require(cur.size >= 2, s"cannot drop the last column of $dir")
-    val v = v0 + 1
-    val files = entries0.map(e => fileKey(e.path))
-    val sd = schemaDir(dir)
-    val f = fs(spark, sd)
-    f.mkdirs(sd)
-    var seq = rawDropEntries(spark, dir).map(_.seq).foldLeft(0)(math.max) + 1
-    var claimed = false
-    while (!claimed) {
-      val payload = s"#version=$v\n#column=$column\n" + files.mkString("", "\n", "\n")
-      val tmp = new Path(sd, s"drop-$seq.list.tmp-${java.util.UUID.randomUUID()}")
-      val out = f.create(tmp, true)
-      try out.write((s"$CrcHeader${crc32Of(payload)}\n" + payload).getBytes(StandardCharsets.UTF_8))
-      finally out.close()
-      claimed = claimExclusive(f, tmp, new Path(sd, s"drop-$seq.list"))
-      f.delete(tmp, false)
-      if (!claimed) seq += 1
-    }
-    if (!tryPublish(spark, dir, v, statsCols0, entries0, None, "drop",
-        s"$DropSeqHeader$seq\n")) {
-      f.delete(new Path(sd, s"drop-$seq.list"), false) // roll back the inert entry
-      throw new IllegalArgumentException(
-        s"commit of v$v lost the publish race to a concurrent writer; " +
-          "re-run the operation against the new latest snapshot")
-    }
-    v
+    commitSchemaChange(spark, dir, v0, statsCols0, entries0, "drop", "column" -> column)
   }
 
-  /** The `#dropseq=` header of `version`'s manifest, None when absent. */
-  private def dropSeqOf(spark: SparkSession, dir: String, version: Int): Option[Int] =
-    manifestLines(spark, dir, version)
-      .find(_.startsWith(DropSeqHeader))
-      .map(_.drop(DropSeqHeader.length).toInt)
-
-  /** [[renameEntryLive]]'s drop twin — same claim/publish liveness. */
-  private def dropEntryLive(spark: SparkSession, dir: String, d: ColumnDrop): Boolean = {
-    if (d.version > latestVersion(spark, dir)) return false
-    val mf = new Path(manifestDir(dir), s"v${d.version}.list")
-    if (!fs(spark, mf).exists(mf)) return true // vacuumed after validation
-    commitOp(spark, dir, d.version).contains("drop") &&
-    dropSeqOf(spark, dir, d.version).contains(d.seq)
-  }
-
-  /** The LIVE recorded drops in application order. */
-  def dropLog(spark: SparkSession, dir: String): Seq[ColumnDrop] =
-    rawDropEntries(spark, dir).filter(dropEntryLive(spark, dir, _))
-
-  /** Every parseable drop entry, live or not (CRC-checked). */
-  private def rawDropEntries(spark: SparkSession, dir: String): Seq[ColumnDrop] = {
-    val sd = schemaDir(dir)
-    val f = fs(spark, sd)
-    if (!f.exists(sd)) Nil
-    else
-      f.listStatus(sd)
-        .flatMap { st =>
-          st.getPath.getName match {
-            case DropFileRe(seq) =>
-              val in = f.open(st.getPath)
-              val content =
-                try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-                finally in.close()
-              require(content.startsWith(CrcHeader), s"drop entry $seq on $dir is malformed")
-              val nl = content.indexOf('\n')
-              val declared = content.substring(CrcHeader.length, nl).toLong
-              val body = content.substring(nl + 1)
-              require(crc32Of(body) == declared,
-                s"drop entry $seq on $dir failed its CRC check: metadata corruption")
-              val lines = body.linesIterator.toList
-              def hdr(k: String) =
-                lines.find(_.startsWith(s"#$k=")).map(_.drop(k.length + 2)).getOrElse(
-                  throw new IllegalArgumentException(s"drop entry $seq on $dir lacks #$k="))
-              Some(ColumnDrop(
-                seq.toInt,
-                hdr("version").toInt,
-                hdr("column"),
-                lines.filterNot(_.startsWith("#")).toSet))
-            case _ => None
-          }
-        }
-        .sortBy(_.seq)
-        .toSeq
-  }
-
-  /** Drops whose column is still physically present in `entries`. */
-  private def activeDrops(
-      spark: SparkSession,
-      dir: String,
-      version: Int,
-      entries: Seq[ManifestEntry]): Seq[ColumnDrop] =
-    dropLog(spark, dir).filter(d =>
-      d.version <= version && entries.exists(e => d.fileKeys.contains(fileKey(e.path))))
-
-  private def requireNoActiveDrop(
-      spark: SparkSession,
-      dir: String,
-      version: Int,
-      entries: Seq[ManifestEntry],
-      op: String): Unit = {
-    val active = activeDrops(spark, dir, version, entries)
-    require(active.isEmpty,
-      s"$op on $dir refused: dropped columns ${active.map(d => s"'${d.column}'").mkString(", ")} " +
-        "are still physically present in live files (a raw rewrite would resurrect them as " +
-        "NULLs across mixed physical schemas) — run commitOptimize first to fold the drop")
-  }
+  // ---- Named refs (tags) -------------------------------------------------
 
   private def tagsDir(dir: String) = new Path(dir, "_tags")
   private val TagFileRe = "(.+)\\.ref".r
@@ -2321,9 +2098,7 @@ object Snapshots {
   def commitDeleteMor(spark: SparkSession, dir: String, column: String, lo: Long, hi: Long): Int = {
     val prev = latestVersion(spark, dir)
     val (statsCols, entries) = manifest(spark, dir, prev)
-    requireNoActiveRename(spark, dir, prev, entries, "MERGE-ON-READ DELETE")
-    requireNoActiveWiden(spark, dir, prev, entries, "MERGE-ON-READ DELETE")
-    requireNoActiveDrop(spark, dir, prev, entries, "MERGE-ON-READ DELETE")
+    requireNoActiveChange(spark, dir, prev, entries, "MERGE-ON-READ DELETE", SchemaKinds)
     val ci = statsCols.indexOf(column)
     require(ci >= 0, s"delete needs a zone map on $column; $dir declares $statsCols")
     val touched = entries.filter(e => e.stats(ci).max >= lo && e.stats(ci).min <= hi)
@@ -2361,7 +2136,8 @@ object Snapshots {
         // change-feed record: the newly dead rows, table columns only —
         // sized by the change, exactly as on the COW path
         val chStage = stageChanges(spark, dir,
-          doomed.drop("__dv_file", "__dv_pos").withColumn(ChangeTypeCol, lit("delete")))
+          doomed.drop("__dv_file", "__dv_pos").withColumn(ChangeTypeCol, lit("delete")),
+          approxRows = manifestRows(touched))
         publishOrAbort(spark, dir, v, statsCols, entries, "delete",
           s"$DvHeader${dvStage.toString}\n$DvRowsHeader$dvRows\n")
         publishChanges(spark, dir, chStage, v)
@@ -2454,9 +2230,7 @@ object Snapshots {
     val prev = latestVersion(spark, dir)
     require(prev >= 1, s"cannot merge into an empty table at $dir")
     val (statsCols, entries) = manifest(spark, dir, prev)
-    requireNoActiveRename(spark, dir, prev, entries, "MERGE-ON-READ MERGE")
-    requireNoActiveWiden(spark, dir, prev, entries, "MERGE-ON-READ MERGE")
-    requireNoActiveDrop(spark, dir, prev, entries, "MERGE-ON-READ MERGE")
+    requireNoActiveChange(spark, dir, prev, entries, "MERGE-ON-READ MERGE", SchemaKinds)
     // the change source is read once (persisted) and shared by the key
     // aggregation, the new-file staging write, and the feed's postimage
     // typing join — the commitMerge convention (guide §1.2), caller's
@@ -2562,8 +2336,10 @@ object Snapshots {
                   .as(ChangeTypeCol): _*))
           (s"$DvHeader${dvStage.toString}\n$DvRowsHeader$dvRows\n", feed)
         }
-      // at most one preimage + one postimage per change key
-      val chStage = stageChanges(spark, dir, feed, approxRows = 2L * nKeys)
+      // at most one preimage + one postimage per change key, and one
+      // insert per key when no base file is touched
+      val chStage =
+        stageChanges(spark, dir, feed, approxRows = if (touched.isEmpty) nKeys else 2L * nKeys)
       // EVERY previous file is carried by reference — the manifest diff is
       // the staged change files plus the vector header, nothing else
       publishOrAbort(spark, dir, v, statsCols, entries ++ staged, "merge",

@@ -821,12 +821,12 @@ class SnapshotsSpec extends AnyFunSuite {
     assert(Snapshots.manifest(spark, dir, 2)._2.map(_.path).toSet == f1,
       "a rename must not stage or drop a single data file")
     // schema time travel: v1 keeps the old name forever; v2 sees the new
-    assert(Snapshots.readVersionRenamed(spark, dir, 1).columns.toSeq == Seq("id", "amount"))
-    assert(Snapshots.readVersionRenamed(spark, dir, 2).columns.toSeq == Seq("id", "cents"))
+    assert(Snapshots.readVersionEvolved(spark, dir, 1).columns.toSeq == Seq("id", "amount"))
+    assert(Snapshots.readVersionEvolved(spark, dir, 2).columns.toSeq == Seq("id", "cents"))
     // an append written under the NEW name: both physical generations
     // unify under `cents`, values intact on each side
     Snapshots.commitAppend(Seq((3L, 30L)).toDF("id", "cents"), dir)
-    val got = Snapshots.readLatestRenamed(spark, dir).as[(Long, Long)].collect().toSet
+    val got = Snapshots.readLatestEvolved(spark, dir).as[(Long, Long)].collect().toSet
     assert(got == Set((1L, 10L), (2L, 20L), (3L, 30L)), s"got $got")
   }
 
@@ -840,11 +840,11 @@ class SnapshotsSpec extends AnyFunSuite {
     Snapshots.commitRename(spark, dir, "a", "b")
     Snapshots.commitRename(spark, dir, "b", "c")
     // a -> b -> c resolves through both entries on the ORIGINAL files
-    assert(Snapshots.readLatestRenamed(spark, dir).columns.toSeq == Seq("id", "c"))
-    assert(Snapshots.readLatestRenamed(spark, dir).as[(Long, Long)].collect().toSet
+    assert(Snapshots.readLatestEvolved(spark, dir).columns.toSeq == Seq("id", "c"))
+    assert(Snapshots.readLatestEvolved(spark, dir).as[(Long, Long)].collect().toSet
       == Set((1L, 10L)))
     // and the pre-rename version still reads as born
-    assert(Snapshots.readVersionRenamed(spark, dir, 1).columns.toSeq == Seq("id", "a"))
+    assert(Snapshots.readVersionEvolved(spark, dir, 1).columns.toSeq == Seq("id", "a"))
   }
 
   test("merge-on-read delete: zero rewrites, exact reads, carried by appends, folded by OPTIMIZE") {
@@ -1030,34 +1030,62 @@ class SnapshotsSpec extends AnyFunSuite {
     }
   }
 
-  test("a claimed-but-never-published rename entry is inert; vacuum reclaims it once dead") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("snap_rename_crash").toString
-    Snapshots.commitOverwrite(Seq((1L, 10L)).toDF("id", "amount"), dir)
-    // simulate a rename that crashed between claiming its schema entry
-    // and publishing its manifest: hand-write the entry exactly as
-    // commitRename stages it, naming the UNPUBLISHED version 2
-    val fileKeys = Snapshots.manifest(spark, dir, 1)._2
-      .map(e => new org.apache.hadoop.fs.Path(e.path).toUri.getPath)
-    val payload = s"#version=2\n#from=amount\n#to=cents\n" + fileKeys.mkString("", "\n", "\n")
-    val crc = { val c = new java.util.zip.CRC32; c.update(payload.getBytes("UTF-8")); c.getValue }
-    val sd = new java.io.File(dir, "_schema"); sd.mkdirs()
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(sd.toString, "rename-1.list"), s"#crc=$crc\n$payload")
-    // pending (v2 unpublished): no reader applies it
-    assert(Snapshots.readLatestRenamed(spark, dir).columns.toSeq == Seq("id", "amount"),
-      "an unpublished rename must not rename anything")
-    // an append lands at v2 — the entry is now PROVABLY dead and stays inert
-    Snapshots.commitAppend(Seq((2L, 20L)).toDF("id", "amount"), dir)
-    assert(Snapshots.readLatestRenamed(spark, dir).columns.toSeq == Seq("id", "amount"),
-      "a version claimed by another commit must never activate a stale rename")
-    // vacuum purges the dead entry while the manifest proving it dead exists
-    Snapshots.vacuum(spark, dir, keepFrom = 1)
-    assert(!new java.io.File(sd, "rename-1.list").exists(),
-      "vacuum must reclaim provably dead rename entries")
-    // and a REAL rename still works afterwards
-    Snapshots.commitRename(spark, dir, "amount", "cents")
-    assert(Snapshots.readLatestRenamed(spark, dir).columns.toSeq == Seq("id", "cents"))
+  // One case per schema-change kind. The `_schema/<kind>-<seq>.list`
+  // entries are hand-written in the established on-disk format (CRC line,
+  // `#version=`, the kind's `#k=v` fields, then the file keys), so the
+  // spec also pins that format: the real change must write the same bytes
+  // and publish an op=<kind> manifest naming its seq in `#<kind>seq=`.
+  Seq[(String, String, String => Int, Seq[String])](
+    ("rename", "#from=amount\n#to=cents\n",
+      Snapshots.commitRename(spark, _, "amount", "cents"), Seq("id:long", "cents:integer")),
+    ("widen", "#column=amount\n#from=integer\n#to=long\n",
+      Snapshots.commitWiden(spark, _, "amount", "long"), Seq("id:long", "amount:long")),
+    ("drop", "#column=amount\n",
+      Snapshots.commitDropColumn(spark, _, "amount"), Seq("id:long"))
+  ).foreach { case (kind, fields, change, evolvedSchema) =>
+    test(s"a claimed-but-never-published $kind entry is inert; vacuum reclaims it once dead") {
+      import spark.implicits._
+      val dir = java.nio.file.Files.createTempDirectory(s"snap_${kind}_crash").toString
+      Snapshots.commitOverwrite(Seq((1L, 10)).toDF("id", "amount"), dir)
+      val born = Snapshots.readLatest(spark, dir).schema
+      def entryBytes(version: Int): String = {
+        val fileKeys = Snapshots.manifest(spark, dir, version - 1)._2
+          .map(e => new org.apache.hadoop.fs.Path(e.path).toUri.getPath)
+        val payload = s"#version=$version\n$fields" + fileKeys.mkString("", "\n", "\n")
+        val crc = { val c = new java.util.zip.CRC32; c.update(payload.getBytes("UTF-8")); c.getValue }
+        s"#crc=$crc\n$payload"
+      }
+      // simulate a change that crashed between claiming its schema entry
+      // and publishing its manifest: the entry names the UNPUBLISHED v2
+      val sd = new java.io.File(dir, "_schema"); sd.mkdirs()
+      val entry = java.nio.file.Paths.get(sd.toString, s"$kind-1.list")
+      java.nio.file.Files.writeString(entry, entryBytes(2))
+      // pending (v2 unpublished): no reader applies it
+      assert(Snapshots.readLatestEvolved(spark, dir).schema == born,
+        s"an unpublished $kind must not change the schema")
+      // an append lands at v2 — the entry is now PROVABLY dead and stays inert
+      Snapshots.commitAppend(Seq((2L, 20)).toDF("id", "amount"), dir)
+      assert(Snapshots.readLatestEvolved(spark, dir).schema == born,
+        s"a version claimed by another commit must never activate a stale $kind")
+      // vacuum purges the dead entry while the manifest proving it dead exists
+      Snapshots.vacuum(spark, dir, keepFrom = 1)
+      assert(!entry.toFile.exists(), s"vacuum must reclaim provably dead $kind entries")
+      // and a REAL change still works afterwards, writing the same format
+      assert(change(dir) == 3)
+      assert(java.nio.file.Files.readString(entry) == entryBytes(3))
+      val mf = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(dir, "_manifests", "v3.list"))
+      assert(mf.contains(s"#op=$kind") && mf.contains(s"#${kind}seq=1"), s"v3 manifest: $mf")
+      def evolved = Snapshots.readLatestEvolved(spark, dir)
+      assert(evolved.schema.map(f => s"${f.name}:${f.dataType.typeName}") == evolvedSchema)
+      assert(evolved.count() == 2L)
+      // a validated entry outlives the manifest that published it
+      Snapshots.commitAppend(evolved.filter(col("id") === 1L), dir)
+      Snapshots.vacuum(spark, dir, keepFrom = 4)
+      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "_manifests", "v3.list")))
+      assert(entry.toFile.exists(), s"vacuum must keep the live $kind entry")
+      assert(evolved.schema.map(f => s"${f.name}:${f.dataType.typeName}") == evolvedSchema)
+      assert(evolved.count() == 3L)
+    }
   }
 
   test("rewrite commits refuse while a rename is active; OPTIMIZE folds it and unblocks them") {
@@ -1080,13 +1108,13 @@ class SnapshotsSpec extends AnyFunSuite {
     assert(statsCols == Seq("id"))
     // post-fold the PHYSICAL schema is uniform: a raw read shows `cents`
     assert(spark.read.parquet(entries.map(_.path): _*).columns.toSet == Set("id", "cents"))
-    assert(Snapshots.readLatestRenamed(spark, dir)
+    assert(Snapshots.readLatestEvolved(spark, dir)
       .select(sum(col("cents"))).as[Long].head() == (0 until 100).map(_ * 10L).sum)
     // and the rewrite commits are legal again
     Snapshots.commitDelete(spark, dir, "id", 10L, 19L)
-    assert(Snapshots.readLatestRenamed(spark, dir).count() == 90L)
+    assert(Snapshots.readLatestEvolved(spark, dir).count() == 90L)
     Snapshots.commitMerge(spark, dir, Seq((1L, 111L)).toDF("id", "cents"), "id")
-    assert(Snapshots.readLatestRenamed(spark, dir)
+    assert(Snapshots.readLatestEvolved(spark, dir)
       .filter(col("id") === 1L).select(col("cents")).as[Long].head() == 111L)
   }
 
@@ -1103,7 +1131,7 @@ class SnapshotsSpec extends AnyFunSuite {
     assert(Snapshots.readVersionRange(spark, dir, v, "cents", 100L, 200L).count() == 11L)
     // and a zone-mapped delete on the folded column works
     Snapshots.commitDelete(spark, dir, "cents", 0L, 90L)
-    assert(Snapshots.readLatestRenamed(spark, dir).count() == 90L)
+    assert(Snapshots.readLatestEvolved(spark, dir).count() == 90L)
   }
 
   test("type widening: metadata-only, schema time travel, generations unify by cast") {
@@ -1159,9 +1187,9 @@ class SnapshotsSpec extends AnyFunSuite {
       .select(sum(col("amount"))).as[Long].head() == (0 until 100).map(_ * 10L).sum)
     // and the previously refused commits are legal again
     Snapshots.commitDelete(spark, dir, "id", 10L, 19L)
-    assert(Snapshots.readLatestRenamed(spark, dir).count() == 90L)
+    assert(Snapshots.readLatestEvolved(spark, dir).count() == 90L)
     Snapshots.commitRename(spark, dir, "amount", "cents")
-    assert(Snapshots.readLatestRenamed(spark, dir).columns.toSet == Set("id", "cents"))
+    assert(Snapshots.readLatestEvolved(spark, dir).columns.toSet == Set("id", "cents"))
   }
 
   test("column drop: metadata-only, schema time travel, projection unifies generations") {
@@ -1213,7 +1241,7 @@ class SnapshotsSpec extends AnyFunSuite {
       .select(sum(col("amount"))).as[Long].head() == (0 until 100).map(_ * 10L).sum)
     // and the previously refused commits are legal again
     Snapshots.commitDelete(spark, dir, "id", 10L, 19L)
-    assert(Snapshots.readLatestRenamed(spark, dir).count() == 90L)
+    assert(Snapshots.readLatestEvolved(spark, dir).count() == 90L)
   }
 
   test("OPTIMIZE re-declares zone-map stats; the freed column can then drop") {
@@ -1235,7 +1263,7 @@ class SnapshotsSpec extends AnyFunSuite {
     // the formerly-declared column is now droppable — the exact remedy
     // commitDropColumn's refusal names
     Snapshots.commitDropColumn(spark, dir, "id")
-    assert(Snapshots.readLatestRenamed(spark, dir).columns.toSeq == Seq("amount", "flag"))
+    assert(Snapshots.readLatestEvolved(spark, dir).columns.toSeq == Seq("amount", "flag"))
   }
 
   test("vacuumPlan predicts exactly what vacuum deletes; post-vacuum it reads zero") {
@@ -1302,7 +1330,7 @@ class SnapshotsSpec extends AnyFunSuite {
     assert(e.getMessage.contains("commitOptimize"), s"refusal should name the fold: $e")
     Snapshots.commitOptimize(spark, dir, targetFileBytes = 1L << 20)
     Snapshots.commitWiden(spark, dir, "n", "long")
-    assert(Snapshots.readLatestRenamed(spark, dir).schema("n").dataType
+    assert(Snapshots.readLatestEvolved(spark, dir).schema("n").dataType
       == org.apache.spark.sql.types.LongType)
   }
 }
