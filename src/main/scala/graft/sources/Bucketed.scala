@@ -116,7 +116,10 @@ object Bucketed {
     // undershoots the target. The parallelism floor keeps a mid-size
     // write from collapsing to one task: coalesce is narrow, so a
     // 1-part coalesce would fold the whole upstream compute into a
-    // single task (guide §2), not just serialize the write.
+    // single task (guide §2), not just serialize the write. The floor
+    // sizes from the UNCOMPRESSED estimate on purpose: what it bounds is
+    // each task's upstream in-memory work (~16 MB of rows), not the file
+    // size, so below 8 parts files may land under the 128 MB band.
     val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val sizeParts = ((est / 3L) / (128L << 20)).toLong + 1L
     val parts =

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, count => fCount, input_file_name, lit, when, max => fMax, min => fMin}
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+import org.apache.spark.storage.StorageLevel
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
@@ -58,6 +59,8 @@ object Snapshots {
   private val CopiedHeader = "#copied="
   private val DvHeader = "#dv="
   private val DvRowsHeader = "#dvrows="
+  /** A deletion vector's columns: the dead rows' (file, row-index). */
+  private val DvCols = Seq("__dv_file", "__dv_pos")
   private val HwmName = "_batch.hwm"
 
   /** The change-feed columns appended to table rows by [[readChangeFeed]]. */
@@ -357,20 +360,19 @@ object Snapshots {
       }
     }
 
-  /** Zone maps for freshly staged files: one narrow read of ONLY the
-    * staged batch computes each file's per-column min/max (at real
-    * cluster scale this would come from the parquet footers the write
-    * already produced; the extra single-column scan keeps this
-    * implementation honest without a footer parser). Declared columns
-    * must be integral-typed and non-null within every staged file — a
-    * silently truncated or null zone map would prune wrongly later, so
-    * both are rejected AT COMMIT time.
+  /** Manifest entries for a freshly staged directory: zone maps on
+    * `statsCols` from the footers ([[zoneEntriesOf]]), or, with no
+    * declared columns, the footer row counts alone ([[listedEntries]]).
+    * Declared columns must be integral-typed and non-null within every
+    * staged file — a silently truncated or null zone map would prune
+    * wrongly later, so both are rejected AT COMMIT time.
     */
-  private def zoneEntries(
+  private def stagedEntries(
       spark: SparkSession,
       stage: Path,
       statsCols: Seq[String]): Seq[ManifestEntry] =
-    zoneEntriesOf(spark, Seq(stage.toString), statsCols)
+    if (statsCols.nonEmpty) zoneEntriesOf(spark, Seq(stage.toString), statsCols)
+    else listedEntries(spark, stage)
 
   /** Per-file zone maps + row counts from the staged files' PARQUET
     * FOOTERS — driver-side metadata reads, never a second scan of data
@@ -549,9 +551,7 @@ object Snapshots {
     // files are unreferenced vacuum fodder
     val stage = new Path(dir, s"data/stage-${java.util.UUID.randomUUID()}")
     df.write.mode("error").parquet(stage.toString)
-    val staged: Seq[ManifestEntry] =
-      if (statsCols.nonEmpty) zoneEntries(spark, stage, statsCols)
-      else listedEntries(spark, stage)
+    val staged = stagedEntries(spark, stage, statsCols)
     var out: Option[Option[Int]] = None
     while (out.isEmpty) {
       // ONE listing per iteration: the batch-id check runs over exactly
@@ -705,41 +705,30 @@ object Snapshots {
     val prev = latestVersion(spark, dir)
     val (statsCols, entries) = manifest(spark, dir, prev)
     requireNoActiveChange(spark, dir, prev, entries, "DELETE", SchemaKinds)
-    val ci = statsCols.indexOf(column)
-    require(ci >= 0, s"delete needs a zone map on $column; $dir declares $statsCols")
-    val (touched, untouched) =
-      entries.partition(e => e.stats(ci).max >= lo && e.stats(ci).min <= hi)
+    val (touched, untouched) = zoneOverlap(entries, zoneIndex(dir, prev, statsCols, column), lo, hi)
     val v = prev + 1
-    var chStage: Option[Path] = None
-    val staged: Seq[ManifestEntry] =
-      if (touched.isEmpty) Nil
-      else {
+    val (staged, chStage) =
+      if (touched.isEmpty) (Nil, None)
+      else withFrames { persist =>
         val stage = new Path(dir, s"data/stage-${java.util.UUID.randomUUID()}")
         // both reads run under the live deletion vector: a raw read of a
         // MOR-deleted table would resurrect its dead rows into the
         // rewrite (and double-report them in the feed). ONE persisted
-        // scan of the pruned file set serves both halves — previously
-        // the survivors and the feed each re-read the touched files.
-        val liveTouched = readFilesDv(spark, dir, prev, touched.map(_.path))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
+        // scan of the pruned file set serves both halves.
+        val liveTouched = persist(readFilesDv(spark, dir, prev, touched.map(_.path)))
+        liveTouched
+          .filter(!col(column).between(lo, hi))
+          .write.mode("error").parquet(stage.toString)
+        // change-feed record: the doomed rows, read from the same pruned
+        // file set the rewrite read — O(touched files), the price every
+        // CDF-enabled format pays on DELETE (the feed row count is the
+        // deleted row count, never the table's)
+        val chStage = stageChanges(spark, dir,
           liveTouched
-            .filter(!col(column).between(lo, hi))
-            .write.mode("error").parquet(stage.toString)
-          // change-feed record: the doomed rows, read from the same pruned
-          // file set the rewrite read — O(touched files), the price every
-          // CDF-enabled format pays on DELETE (the feed row count is the
-          // deleted row count, never the table's)
-          chStage = Some(stageChanges(spark, dir,
-            liveTouched
-              .filter(col(column).between(lo, hi))
-              .withColumn(ChangeTypeCol, lit("delete")),
-            approxRows = manifestRows(touched)))
-          zoneEntries(spark, stage, statsCols)
-        } finally {
-          liveTouched.unpersist(blocking = false)
-          ()
-        }
+            .filter(col(column).between(lo, hi))
+            .withColumn(ChangeTypeCol, lit("delete")),
+          approxRows = manifestRows(touched))
+        (stagedEntries(spark, stage, statsCols), Some(chStage))
       }
     // the carried vector still covers the UNTOUCHED files (its entries
     // for the rewritten files key on paths no longer listed — inert)
@@ -747,6 +736,41 @@ object Snapshots {
       dvCarryHeader(spark, dir, prev))
     chStage.foreach(publishChanges(spark, dir, _, v))
     v
+  }
+
+  /** Index of `column` among the zone-map columns `version` declares —
+    * refused when it has none (range pruning, range deletes and the
+    * metadata answers all need a map on the column).
+    */
+  private def zoneIndex(dir: String, version: Int, statsCols: Seq[String], column: String): Int = {
+    val ci = statsCols.indexOf(column)
+    require(ci >= 0,
+      s"snapshot v$version of $dir carries no zone map on $column (declared: $statsCols)")
+    ci
+  }
+
+  /** `entries` split into the files whose zone map at `ci` MAY hold a
+    * value in [lo, hi] and the files that cannot.
+    */
+  private def zoneOverlap(
+      entries: Seq[ManifestEntry],
+      ci: Int,
+      lo: Long,
+      hi: Long): (Seq[ManifestEntry], Seq[ManifestEntry]) =
+    entries.partition(e => e.stats(ci).max >= lo && e.stats(ci).min <= hi)
+
+  /** Run a commit body with a `persist` that registers every frame it
+    * persists; all of them are unpersisted when the body ends — on an
+    * abort in publishOrAbort or a failed write too, since commit paths
+    * run outside CacheScope and a leaked MEMORY_AND_DISK block would
+    * live for the session.
+    */
+  private def withFrames[T](body: (DataFrame => DataFrame) => T): T = {
+    val frames = scala.collection.mutable.ListBuffer.empty[DataFrame]
+    try body { df =>
+      frames += df.persist(StorageLevel.MEMORY_AND_DISK)
+      df
+    } finally frames.foreach(_.unpersist(blocking = false))
   }
 
   /** Broadcast hint gated on a KNOWN row count. The change-batch key set
@@ -766,6 +790,100 @@ object Snapshots {
       try spark.conf.get("spark.graft.broadcastMaxRows", "8000000").toLong
       catch { case _: NumberFormatException => 8000000L }
     if (rows <= cap) broadcast(df) else df
+  }
+
+  /** The key stage's output, shared by both merge layouts: the change
+    * batch `ch`, its distinct `keys` (`nKeys` of them, broadcast through
+    * `keyB` under the row-count gate), and the manifest split into files
+    * that may hold a change key (`touched`) and files that cannot.
+    */
+  private final case class MergeKeys(
+      keyCol: String,
+      ch: DataFrame,
+      keys: DataFrame,
+      nKeys: Long,
+      keyB: DataFrame => DataFrame,
+      touched: Seq[ManifestEntry],
+      untouched: Seq[ManifestEntry])
+
+  /** The merge key stage. The change SOURCE is read once (persisted) and
+    * shared by the key aggregation, the staging write and the feed's
+    * typing join; a batch the caller already cached stays the caller's
+    * (neither re-persisted nor unpersisted here). ONE persisted
+    * aggregation per key serves the at-most-one-row-per-key guard, the
+    * broadcast size guard and every key-distinct consumer (hit test,
+    * anti/semi joins, feed) — guide §1.2: don't recompute what you
+    * already have. A file is touched when its zone map on `keyCol`
+    * contains a change key: the distinct keys join the BROADCAST
+    * file-range list (metadata-sized, exact). With no zone map on
+    * `keyCol` every file is touched (correct, just unpruned).
+    */
+  private def mergeKeys(
+      spark: SparkSession,
+      persist: DataFrame => DataFrame,
+      statsCols: Seq[String],
+      entries: Seq[ManifestEntry],
+      changes: DataFrame,
+      keyCol: String): MergeKeys = {
+    val ch = if (changes.storageLevel == StorageLevel.NONE) persist(changes) else changes
+    val keyCounts = persist(ch.groupBy(col(keyCol)).count())
+    val kc = keyCounts
+      .agg(fCount(lit(1)).as("n"), coalesce(fMax(col("count")), lit(0L)).as("mx"))
+      .head()
+    val nKeys = kc.getLong(0)
+    require(kc.getLong(1) <= 1L, s"merge changes must carry at most one row per $keyCol")
+    val keys = keyCounts.select(col(keyCol))
+    val ci = statsCols.indexOf(keyCol)
+    val touchedPaths: Set[String] =
+      if (ci < 0) entries.map(_.path).toSet
+      else if (entries.isEmpty) Set.empty
+      else {
+        val ranges = spark
+          .createDataFrame(entries.map(e => (e.path, e.stats(ci).min, e.stats(ci).max)))
+          .toDF("path", "mn", "mx")
+        keys
+          .select(col(keyCol).cast("long").as("k"))
+          .join(broadcast(ranges), col("k").between(col("mn"), col("mx")))
+          .select("path")
+          .distinct()
+          .collect()
+          .map(_.getString(0))
+          .toSet
+      }
+    val (touched, untouched) = entries.partition(e => touchedPaths.contains(e.path))
+    MergeKeys(keyCol, ch, keys, nKeys, maybeBroadcast(spark, _, nKeys), touched, untouched)
+  }
+
+  /** Stage a merge's change record: `pre` — the live base rows the merge
+    * replaces, table columns only; None when it touched no file — as
+    * update_preimage, then every change row typed in place by ONE
+    * guarded LEFT join against the keys `pre` holds: update_postimage
+    * when it replaced a row, insert otherwise. The marker column is
+    * salted so a table column can never collide with it (an
+    * ambiguous-reference AnalysisException at commit time otherwise).
+    * Sized as at most one preimage + one postimage per change key, and
+    * one insert per key when nothing was touched.
+    */
+  private def stageMergeFeed(
+      spark: SparkSession,
+      dir: String,
+      persist: DataFrame => DataFrame,
+      k: MergeKeys,
+      pre: Option[DataFrame]): Path = {
+    val feed = pre match {
+      case None => k.ch.withColumn(ChangeTypeCol, lit("insert"))
+      case Some(p) =>
+        val matchedKeys = persist(p.select(col(k.keyCol)).distinct())
+        val mCol = s"__matched_${java.util.UUID.randomUUID().toString.take(8)}"
+        p.withColumn(ChangeTypeCol, lit("update_preimage"))
+          .unionByName(k.ch
+            .join(k.keyB(matchedKeys.withColumn(mCol, lit(1L))), Seq(k.keyCol), "left")
+            .select(k.ch.columns.map(col).toIndexedSeq :+
+              when(col(mCol) === 1L, lit("update_postimage"))
+                .otherwise(lit("insert"))
+                .as(ChangeTypeCol): _*))
+    }
+    stageChanges(spark, dir, feed, approxRows = if (pre.isEmpty) k.nKeys else 2L * k.nKeys)
   }
 
   /** Copy-on-write MERGE (keyed upsert) of a `changes` batch — the BATCH
@@ -791,129 +909,28 @@ object Snapshots {
     require(prev >= 1, s"cannot merge into an empty table at $dir")
     val (statsCols, entries) = manifest(spark, dir, prev)
     requireNoActiveChange(spark, dir, prev, entries, "MERGE", SchemaKinds)
-    // The change SOURCE is read once (persisted) and shared by the key
-    // aggregation, the rewrite's union side, and the feed's postimage
-    // typing join — previously each of those re-derived the caller's
-    // change query (three scans of the change source per commit; guide
-    // §1.2: don't recompute what you already have). Batch-sized, freed
-    // before return. A batch the caller already cached stays the caller's:
-    // it is neither re-persisted nor unpersisted here.
-    val ownsCh = changes.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    val ch =
-      if (ownsCh) changes.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else changes
-    // ONE aggregation serves both the dup-key guard and every key-distinct
-    // consumer below (hit test, anti-join, feed semi-joins) — the change
-    // batch was previously re-aggregated four times per commit, which at
-    // 100 TB means four reads of the change source (guide §1.2: don't
-    // compute things you throw away). The persisted key frame is
-    // batch-sized (one row per key) and freed before return.
-    val keyCounts = ch
-      .groupBy(col(keyCol))
-      .count()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var baseTouched: Option[DataFrame] = None
-    var matchedKeysP: Option[DataFrame] = None
-    // try/finally so an abort in publishOrAbort (or any write failure)
-    // frees the MEMORY_AND_DISK blocks too — commit paths run outside
-    // CacheScope, so a leak here lived for the session
-    try {
-      // ONE aggregation over the persisted key frame serves the dup-key
-      // guard AND the broadcast-size guard (row count)
-      val kc = keyCounts
-        .agg(fCount(lit(1)).as("n"), coalesce(fMax(col("count")), lit(0L)).as("mx"))
-        .head()
-      val nKeys = kc.getLong(0)
-      require(kc.getLong(1) <= 1L, s"merge changes must carry at most one row per $keyCol")
-      def keyB(df: DataFrame): DataFrame = maybeBroadcast(spark, df, nKeys)
-      val changeKeys = keyCounts.select(col(keyCol))
-      val ci = statsCols.indexOf(keyCol)
-      val touchedPaths: Set[String] =
-        if (ci < 0) entries.map(_.path).toSet
-        else if (entries.isEmpty) Set.empty
-        else {
-          val ranges = spark
-            .createDataFrame(entries.map(e => (e.path, e.stats(ci).min, e.stats(ci).max)))
-            .toDF("path", "mn", "mx")
-          changeKeys
-            .select(col(keyCol).cast("long").as("k"))
-            .join(broadcast(ranges), col("k").between(col("mn"), col("mx")))
-            .select("path")
-            .distinct()
-            .collect()
-            .map(_.getString(0))
-            .toSet
-        }
-      val (touched, untouched) = entries.partition(e => touchedPaths.contains(e.path))
+    withFrames { persist =>
+      val k = mergeKeys(spark, persist, statsCols, entries, changes, keyCol)
       val v = prev + 1
       val stage = new Path(dir, s"data/stage-${java.util.UUID.randomUUID()}")
       // the touched files are read ONCE (persisted) and shared by the
-      // rewrite and the feed below — previously three separate scans of the
-      // same pruned file set per commit. The guarded broadcast pins the hash
-      // join so the staged files keep the scan's partitioning.
-      baseTouched =
-        if (touched.isEmpty) None
-        else Some(
-          readFilesDv(spark, dir, prev, touched.map(_.path))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      val survivors = baseTouched match {
-        case None => ch
-        case Some(bt) =>
-          bt.join(keyB(changeKeys), Seq(keyCol), "left_anti").unionByName(ch)
-      }
-      survivors.write.mode("error").parquet(stage.toString)
-      // change-feed record: replaced rows surface as update_preimage (their
-      // old values) + update_postimage (the change row), unmatched change
-      // keys as insert — all derived from the SAME pruned touched-file set
-      // the rewrite read, so the feed costs O(touched + changes), never a
+      // rewrite and the feed. The guarded broadcast pins the hash join so
+      // the staged files keep the scan's partitioning.
+      val baseTouched =
+        if (k.touched.isEmpty) None
+        else Some(persist(readFilesDv(spark, dir, prev, k.touched.map(_.path))))
+      baseTouched
+        .fold(k.ch)(_.join(k.keyB(k.keys), Seq(keyCol), "left_anti").unionByName(k.ch))
+        .write.mode("error").parquet(stage.toString)
+      // the preimages come from the SAME pruned touched-file set the
+      // rewrite read, so the feed costs O(touched + changes), never a
       // table scan
-      val chStage = {
-        val feed = baseTouched match {
-          case None => ch.withColumn(ChangeTypeCol, lit("insert"))
-          case Some(bt) =>
-            val pre = bt.join(keyB(changeKeys), Seq(keyCol), "left_semi")
-            val matchedKeys = pre
-              .select(col(keyCol))
-              .distinct()
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            matchedKeysP = Some(matchedKeys)
-            // one pass over the change batch: a guarded-broadcast LEFT join
-            // against the matched keys types each change row in place
-            // (matched → update_postimage, unmatched → insert) — the
-            // semi + anti pair read the batch twice for the same split.
-            // Marker column name is salted so a table column can never
-            // collide with it (an ambiguous-reference AnalysisException
-            // at commit time otherwise).
-            val mCol = s"__matched_${java.util.UUID.randomUUID().toString.take(8)}"
-            val changeCols = ch.columns.map(col).toIndexedSeq
-            pre
-              .withColumn(ChangeTypeCol, lit("update_preimage"))
-              .unionByName(ch
-                .join(
-                  keyB(matchedKeys.withColumn(mCol, lit(1L))),
-                  Seq(keyCol),
-                  "left")
-                .select(changeCols :+
-                  when(col(mCol) === 1L, lit("update_postimage"))
-                    .otherwise(lit("insert"))
-                    .as(ChangeTypeCol): _*))
-        }
-        // the feed is at most one preimage + one postimage per change key,
-        // and one insert per key when no base file is touched
-        stageChanges(spark, dir, feed, approxRows = if (baseTouched.isEmpty) nKeys else 2L * nKeys)
-      }
-      val staged =
-        if (statsCols.nonEmpty) zoneEntries(spark, stage, statsCols)
-        else listedEntries(spark, stage)
-      publishOrAbort(spark, dir, v, statsCols, untouched ++ staged, "merge",
-        dvCarryHeader(spark, dir, prev))
+      val chStage = stageMergeFeed(spark, dir, persist, k,
+        baseTouched.map(_.join(k.keyB(k.keys), Seq(keyCol), "left_semi")))
+      publishOrAbort(spark, dir, v, statsCols, k.untouched ++ stagedEntries(spark, stage, statsCols),
+        "merge", dvCarryHeader(spark, dir, prev))
       publishChanges(spark, dir, chStage, v)
       v
-    } finally {
-      if (ownsCh) ch.unpersist(blocking = false)
-      keyCounts.unpersist(blocking = false)
-      baseTouched.foreach(_.unpersist(blocking = false))
-      matchedKeysP.foreach(_.unpersist(blocking = false))
-      ()
     }
   }
 
@@ -993,9 +1010,7 @@ object Snapshots {
     }
     val stage = new Path(dir, s"data/stage-${java.util.UUID.randomUUID()}")
     packed.write.mode("error").parquet(stage.toString)
-    val staged =
-      if (foldedStats.nonEmpty) zoneEntries(spark, stage, foldedStats)
-      else listedEntries(spark, stage)
+    val staged = stagedEntries(spark, stage, foldedStats)
     val v = prev + 1
     publishOrAbort(spark, dir, v, foldedStats, staged, "optimize")
     v
@@ -2039,23 +2054,18 @@ object Snapshots {
     * replaces the content and drops it).
     */
   private def dvCarryHeader(spark: SparkSession, dir: String, version: Int): String =
-    if (version < 1) ""
-    else
-      dvInfo(spark, dir, version)
-        .map { case (p, n) => s"$DvHeader$p\n$DvRowsHeader$n\n" }
-        .getOrElse("")
+    if (version < 1) "" else dvHeader(dvInfo(spark, dir, version))
+
+  private def dvHeader(dv: Option[(String, Long)]): String =
+    dv.map { case (p, n) => s"$DvHeader$p\n$DvRowsHeader$n\n" }.getOrElse("")
 
   private def requireNoLiveDv(spark: SparkSession, dir: String, version: Int, what: String): Unit =
     require(dvInfo(spark, dir, version).isEmpty,
       s"$what on $dir refused while v$version carries a deletion vector (its answer would " +
         "silently include dead rows) — run commitOptimize to fold the deletes into the layout first")
 
-  /** Read `paths` under `version`'s deletion vector: dead (file, row)
-    * positions anti-join out via the parquet reader's `_metadata`
-    * columns, broadcast (a DV is small by contract — the tombstone-set
-    * discipline; OPTIMIZE folds it before it grows past broadcast size).
-    * The scan itself is the plain parquet scan — pruning and pushdown
-    * intact; the anti-join adds no exchange on the data side.
+  /** Read `paths` under `version`'s deletion vector. With no vector it is
+    * the plain parquet scan — pruning and pushdown intact.
     */
   private def readFilesDv(
       spark: SparkSession,
@@ -2067,16 +2077,54 @@ object Snapshots {
     val base = rd.parquet(paths: _*)
     dvInfo(spark, dir, version) match {
       case None => base
-      case Some((dvPath, dvRows)) =>
-        val cols = base.columns.map(col).toSeq
-        base
-          .withColumn("__dv_file", col("_metadata.file_path"))
-          .withColumn("__dv_pos", col("_metadata.row_index"))
-          .join(
-            maybeBroadcast(spark, spark.read.parquet(dvPath), dvRows),
-            Seq("__dv_file", "__dv_pos"),
-            "left_anti")
-          .select(cols: _*)
+      case dv   => livePositions(spark, base, dv).drop(DvCols: _*)
+    }
+  }
+
+  /** The rows of the plain scan `base` that `dv` leaves live, each with
+    * its position in [[DvCols]] from the parquet reader's `_metadata`.
+    * The dead positions anti-join out broadcast (a DV is small by
+    * contract — the tombstone-set discipline; OPTIMIZE folds it before it
+    * grows past broadcast size), so the join adds no exchange on the
+    * data side.
+    */
+  private def livePositions(
+      spark: SparkSession,
+      base: DataFrame,
+      dv: Option[(String, Long)]): DataFrame = {
+    val withPos = base
+      .withColumn("__dv_file", col("_metadata.file_path"))
+      .withColumn("__dv_pos", col("_metadata.row_index"))
+    dv.fold(withPos) { case (p, n) =>
+      withPos.join(maybeBroadcast(spark, spark.read.parquet(p), n), DvCols, "left_anti")
+    }
+  }
+
+  /** Stage `prev ∪ positions` as a new vector sidecar and return the
+    * manifest header that publishes it. The cardinality comes from the
+    * just-written footers (driver-side metadata, never a count job).
+    * `positions` are live, so they are disjoint from `prev`: a
+    * cardinality equal to `prev`'s means the commit killed no row, and
+    * then the staged copy is deleted and `prev` is carried as it was.
+    * Publishing it instead would put a vector on a table that had none
+    * (every read then pays the anti-join, and the metadata answers and
+    * renames refuse), or rewrite a live one unchanged.
+    */
+  private def writeDv(
+      spark: SparkSession,
+      dir: String,
+      prev: Option[(String, Long)],
+      positions: DataFrame): String = {
+    val dvStage = new Path(dir, s"dv/dv-${java.util.UUID.randomUUID()}")
+    val delta = positions.select(DvCols.map(col): _*)
+    prev
+      .fold(delta) { case (p, _) => spark.read.parquet(p).unionByName(delta) }
+      .write.mode("error").parquet(dvStage.toString)
+    val dvRows = footerRowsUnder(spark, dvStage)
+    if (dvRows > prev.fold(0L)(_._2)) dvHeader(Some((dvStage.toString, dvRows)))
+    else {
+      fs(spark, dvStage).delete(dvStage, true)
+      dvHeader(prev)
     }
   }
 
@@ -2099,53 +2147,27 @@ object Snapshots {
     val prev = latestVersion(spark, dir)
     val (statsCols, entries) = manifest(spark, dir, prev)
     requireNoActiveChange(spark, dir, prev, entries, "MERGE-ON-READ DELETE", SchemaKinds)
-    val ci = statsCols.indexOf(column)
-    require(ci >= 0, s"delete needs a zone map on $column; $dir declares $statsCols")
-    val touched = entries.filter(e => e.stats(ci).max >= lo && e.stats(ci).min <= hi)
+    val touched = zoneOverlap(entries, zoneIndex(dir, prev, statsCols, column), lo, hi)._1
     val v = prev + 1
+    val prevDv = dvInfo(spark, dir, prev)
     if (touched.isEmpty) {
-      publishOrAbort(spark, dir, v, statsCols, entries, "delete",
-        dvCarryHeader(spark, dir, prev))
+      publishOrAbort(spark, dir, v, statsCols, entries, "delete", dvHeader(prevDv))
       v
-    } else {
-      val prevDv = dvInfo(spark, dir, prev)
-      val withPos = spark.read
-        .parquet(touched.map(_.path): _*)
-        .withColumn("__dv_file", col("_metadata.file_path"))
-        .withColumn("__dv_pos", col("_metadata.row_index"))
-      val liveTouched = prevDv.fold(withPos) { case (p, n) =>
-        withPos.join(
-          maybeBroadcast(spark, spark.read.parquet(p), n),
-          Seq("__dv_file", "__dv_pos"),
-          "left_anti")
-      }
-      // doomed feeds both the vector delta and the feed record — persist
+    } else withFrames { persist =>
+      // doomed feeds both the vector delta and the feed record — persisted
       // so the touched files are scanned once, not twice
-      val doomed = liveTouched
-        .filter(col(column).between(lo, hi))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val dvStage = new Path(dir, s"dv/dv-${java.util.UUID.randomUUID()}")
-        val newDv = prevDv.fold(doomed.select(col("__dv_file"), col("__dv_pos"))) { case (p, _) =>
-          spark.read.parquet(p).unionByName(doomed.select(col("__dv_file"), col("__dv_pos")))
-        }
-        newDv.write.mode("error").parquet(dvStage.toString)
-        // row count from the just-written footers (driver-only metadata
-        // read, the listedEntries convention) instead of a count job
-        val dvRows = footerRowsUnder(spark, dvStage)
-        // change-feed record: the newly dead rows, table columns only —
-        // sized by the change, exactly as on the COW path
-        val chStage = stageChanges(spark, dir,
-          doomed.drop("__dv_file", "__dv_pos").withColumn(ChangeTypeCol, lit("delete")),
-          approxRows = manifestRows(touched))
-        publishOrAbort(spark, dir, v, statsCols, entries, "delete",
-          s"$DvHeader${dvStage.toString}\n$DvRowsHeader$dvRows\n")
-        publishChanges(spark, dir, chStage, v)
-        v
-      } finally {
-        doomed.unpersist(blocking = false)
-        ()
-      }
+      val doomed = persist(
+        livePositions(spark, spark.read.parquet(touched.map(_.path): _*), prevDv)
+          .filter(col(column).between(lo, hi)))
+      val header = writeDv(spark, dir, prevDv, doomed)
+      // change-feed record: the newly dead rows, table columns only —
+      // sized by the change, exactly as on the COW path
+      val chStage = stageChanges(spark, dir,
+        doomed.drop(DvCols: _*).withColumn(ChangeTypeCol, lit("delete")),
+        approxRows = manifestRows(touched))
+      publishOrAbort(spark, dir, v, statsCols, entries, "delete", header)
+      publishChanges(spark, dir, chStage, v)
+      v
     }
   }
 
@@ -2231,127 +2253,32 @@ object Snapshots {
     require(prev >= 1, s"cannot merge into an empty table at $dir")
     val (statsCols, entries) = manifest(spark, dir, prev)
     requireNoActiveChange(spark, dir, prev, entries, "MERGE-ON-READ MERGE", SchemaKinds)
-    // the change source is read once (persisted) and shared by the key
-    // aggregation, the new-file staging write, and the feed's postimage
-    // typing join — the commitMerge convention (guide §1.2), caller's
-    // cache left alone included
-    val ownsCh = changes.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    val ch =
-      if (ownsCh) changes.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else changes
-    // one aggregation for the dup guard + every key-distinct consumer
-    // (hit test, tombstone semi-join, feed) — the commitMerge convention
-    val keyCounts = ch
-      .groupBy(col(keyCol))
-      .count()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val toFree = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    // try/finally: an abort in publishOrAbort or a write failure must
-    // free the persisted blocks too (the commitMerge convention)
-    try {
-      // one aggregation for the dup guard + the broadcast-size guard
-      val kc = keyCounts
-        .agg(fCount(lit(1)).as("n"), coalesce(fMax(col("count")), lit(0L)).as("mx"))
-        .head()
-      val nKeys = kc.getLong(0)
-      require(kc.getLong(1) <= 1L, s"merge changes must carry at most one row per $keyCol")
-      def keyB(df: DataFrame): DataFrame = maybeBroadcast(spark, df, nKeys)
-      val changeKeys = keyCounts.select(col(keyCol))
-      val ci = statsCols.indexOf(keyCol)
-      val touchedPaths: Set[String] =
-        if (ci < 0) entries.map(_.path).toSet
-        else if (entries.isEmpty) Set.empty
-        else {
-          val ranges = spark
-            .createDataFrame(entries.map(e => (e.path, e.stats(ci).min, e.stats(ci).max)))
-            .toDF("path", "mn", "mx")
-          changeKeys
-            .select(col(keyCol).cast("long").as("k"))
-            .join(broadcast(ranges), col("k").between(col("mn"), col("mx")))
-            .select("path")
-            .distinct()
-            .collect()
-            .map(_.getString(0))
-            .toSet
-        }
-      val touched = entries.filter(e => touchedPaths.contains(e.path))
+    withFrames { persist =>
+      val k = mergeKeys(spark, persist, statsCols, entries, changes, keyCol)
       val v = prev + 1
       // the change batch IS the new file set: postimages and inserts
       // together, written once — never joined back against the base
       val stage = new Path(dir, s"data/stage-${java.util.UUID.randomUUID()}")
-      ch.write.mode("error").parquet(stage.toString)
-      val staged =
-        if (statsCols.nonEmpty) zoneEntries(spark, stage, statsCols)
-        else listedEntries(spark, stage)
+      k.ch.write.mode("error").parquet(stage.toString)
+      val staged = stagedEntries(spark, stage, statsCols)
+      // matched LIVE base rows (dead rows never re-enter the vector or the
+      // feed) become the new tombstone positions; persisted — the vector
+      // delta, the preimage feed, and the matched-key frame all read it
       val prevDv = dvInfo(spark, dir, prev)
-      val (dvHeader, feed) =
-        if (touched.isEmpty) {
-          (dvCarryHeader(spark, dir, prev), ch.withColumn(ChangeTypeCol, lit("insert")))
-        } else {
-          // matched LIVE base rows (dead rows never re-enter the vector or
-          // the feed) become the new tombstone positions; persisted — the
-          // vector delta, the preimage feed, and the matched-key frame all
-          // read it (previously three scans of the touched files)
-          val withPos = spark.read
-            .parquet(touched.map(_.path): _*)
-            .withColumn("__dv_file", col("_metadata.file_path"))
-            .withColumn("__dv_pos", col("_metadata.row_index"))
-          val liveTouched = prevDv.fold(withPos) { case (p, n) =>
-            withPos.join(
-              maybeBroadcast(spark, spark.read.parquet(p), n),
-              Seq("__dv_file", "__dv_pos"),
-              "left_anti")
-          }
-          val matched = liveTouched
-            .join(keyB(changeKeys), Seq(keyCol), "left_semi")
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          toFree += matched
-          val dvStage = new Path(dir, s"dv/dv-${java.util.UUID.randomUUID()}")
-          val newDv = prevDv.fold(matched.select(col("__dv_file"), col("__dv_pos"))) { case (p, _) =>
-            spark.read.parquet(p).unionByName(matched.select(col("__dv_file"), col("__dv_pos")))
-          }
-          newDv.write.mode("error").parquet(dvStage.toString)
-          // footer metadata, not a count job (the listedEntries convention)
-          val dvRows = footerRowsUnder(spark, dvStage)
-          val matchedKeys = matched
-            .select(col(keyCol))
-            .distinct()
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          toFree += matchedKeys
-          // one pass over the change batch (the commitMerge convention):
-          // matched keys type as update_postimage, the rest as insert;
-          // marker column salted against table-schema collisions
-          val mCol = s"__matched_${java.util.UUID.randomUUID().toString.take(8)}"
-          val changeCols = ch.columns.map(col).toIndexedSeq
-          val feed = matched
-            .drop("__dv_file", "__dv_pos")
-            .withColumn(ChangeTypeCol, lit("update_preimage"))
-            .unionByName(ch
-              .join(
-                keyB(matchedKeys.withColumn(mCol, lit(1L))),
-                Seq(keyCol),
-                "left")
-              .select(changeCols :+
-                when(col(mCol) === 1L, lit("update_postimage"))
-                  .otherwise(lit("insert"))
-                  .as(ChangeTypeCol): _*))
-          (s"$DvHeader${dvStage.toString}\n$DvRowsHeader$dvRows\n", feed)
-        }
-      // at most one preimage + one postimage per change key, and one
-      // insert per key when no base file is touched
-      val chStage =
-        stageChanges(spark, dir, feed, approxRows = if (touched.isEmpty) nKeys else 2L * nKeys)
+      val matched =
+        if (k.touched.isEmpty) None
+        else Some(persist(
+          livePositions(spark, spark.read.parquet(k.touched.map(_.path): _*), prevDv)
+            .join(k.keyB(k.keys), Seq(keyCol), "left_semi")))
+      val header = matched.fold(dvHeader(prevDv))(writeDv(spark, dir, prevDv, _))
+      val chStage = stageMergeFeed(spark, dir, persist, k, matched.map(_.drop(DvCols: _*)))
       // EVERY previous file is carried by reference — the manifest diff is
       // the staged change files plus the vector header, nothing else
       publishOrAbort(spark, dir, v, statsCols, entries ++ staged, "merge",
-        dvHeader + batchId.map(b => s"$BatchHeader$b\n").getOrElse(""))
+        header + batchId.map(b => s"$BatchHeader$b\n").getOrElse(""))
       publishChanges(spark, dir, chStage, v)
       batchId.foreach(b => writeHwm(spark, dir, b, v))
       Some(v)
-    } finally {
-      if (ownsCh) ch.unpersist(blocking = false)
-      keyCounts.unpersist(blocking = false)
-      toFree.foreach(_.unpersist(blocking = false))
-      ()
     }
   }
 
@@ -2464,10 +2391,7 @@ object Snapshots {
       lo: Long,
       hi: Long): DataFrame = {
     val (statsCols, entries) = manifest(spark, dir, version)
-    val ci = statsCols.indexOf(column)
-    require(ci >= 0,
-      s"snapshot v$version of $dir carries no zone map on $column (declared: $statsCols)")
-    val keep = entries.filter(e => e.stats(ci).max >= lo && e.stats(ci).min <= hi).map(_.path)
+    val keep = zoneOverlap(entries, zoneIndex(dir, version, statsCols, column), lo, hi)._1.map(_.path)
     // zone maps exclude every file: any one file's schema + an
     // always-false residual yields the same (empty) result
     val src = if (keep.nonEmpty) keep else entries.map(_.path).take(1)
@@ -2520,9 +2444,7 @@ object Snapshots {
     // an over-approximation — refuse rather than answer inexactly
     requireNoLiveDv(spark, dir, version, "METADATA MIN/MAX")
     val (statsCols, entries) = countedEntries(spark, dir, version)
-    val ci = statsCols.indexOf(column)
-    require(ci >= 0,
-      s"snapshot v$version of $dir carries no zone map on $column (declared: $statsCols)")
+    val ci = zoneIndex(dir, version, statsCols, column)
     require(entries.nonEmpty, s"snapshot v$version of $dir is empty")
     (entries.map(_.stats(ci).min).min, entries.map(_.stats(ci).max).max)
   }
@@ -2555,10 +2477,8 @@ object Snapshots {
     // dead rows under a live vector — refuse rather than over-count
     requireNoLiveDv(spark, dir, version, "METADATA RANGE COUNT")
     val (statsCols, entries) = countedEntries(spark, dir, version)
-    val ci = statsCols.indexOf(column)
-    require(ci >= 0,
-      s"snapshot v$version of $dir carries no zone map on $column (declared: $statsCols)")
-    val overlapping = entries.filter(e => e.stats(ci).max >= lo && e.stats(ci).min <= hi)
+    val ci = zoneIndex(dir, version, statsCols, column)
+    val overlapping = zoneOverlap(entries, ci, lo, hi)._1
     val (contained, boundary) =
       overlapping.partition(e => e.stats(ci).min >= lo && e.stats(ci).max <= hi)
     val scanned =

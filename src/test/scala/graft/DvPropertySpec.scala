@@ -1,6 +1,7 @@
 package graft
 
 import graft.sources.Snapshots
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.util.Random
@@ -15,7 +16,10 @@ import scala.util.Random
   * COW and MoR forms of the same operation are interchangeable at any
   * point in history — the read-side indistinguishability contract the
   * targeted SnapshotsSpec tests pin pairwise, here exercised across
-  * arbitrary compositions.
+  * arbitrary compositions. Each commit's change feed must also replay
+  * the previous model state into the new one, with every record typed
+  * as the model says (an insert is a new key, a preimage or delete is
+  * the previous row), and no commit may leave a persisted RDD behind.
   */
 class DvPropertySpec extends AnyFunSuite {
   private lazy val spark = Sessions.local("4")
@@ -41,7 +45,33 @@ class DvPropertySpec extends AnyFunSuite {
       snaps += live
       def readMap(v: Int): Map[Long, Long] =
         Snapshots.readVersion(spark, dir, v).as[(Long, Long)].collect().toMap
+      def persisted() = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      // apply v's change feed to the state at v-1: inserts and postimages
+      // upsert, deletes remove, preimages only check the row they replace
+      def replay(prev: Map[Long, Long], v: Int): Map[Long, Long] =
+        Snapshots.readChangeFeed(spark, dir, v - 1, v)
+          .select(col("id"), col("cents"), col(Snapshots.ChangeTypeCol))
+          .as[(Long, Long, String)]
+          .collect()
+          .foldLeft(prev) { case (m, (id, c, t)) =>
+            val was = prev.get(id)
+            t match {
+              case "insert" =>
+                assert(was.isEmpty, s"v$v: insert of existing key $id")
+                m + (id -> c)
+              case "update_postimage" =>
+                assert(was.nonEmpty, s"v$v: postimage of absent key $id")
+                m + (id -> c)
+              case "update_preimage" =>
+                assert(was.contains(c), s"v$v: preimage ($id, $c) is not the previous row $was")
+                m
+              case "delete" =>
+                assert(was.contains(c), s"v$v: delete ($id, $c) is not the previous row $was")
+                m - id
+            }
+          }
       (1 to 12).foreach { step =>
+        val before = persisted()
         rnd.nextInt(6) match {
           case 0 =>
             val rows = freshRows(1 + rnd.nextInt(8))
@@ -73,7 +103,10 @@ class DvPropertySpec extends AnyFunSuite {
             snaps += live
         }
         val v = Snapshots.latestVersion(spark, dir)
+        assert(persisted() == before, s"seed $seed step $step: the commit left persisted RDDs")
         assert(v == snaps.size, s"seed $seed step $step: version/model drift")
+        if (v >= 2)
+          assert(replay(snaps(v - 2), v) == live, s"seed $seed step $step: feed replay diverged")
         assert(readMap(v) == live, s"seed $seed step $step: latest read diverged")
         val hv = 1 + rnd.nextInt(v)
         assert(readMap(hv) == snaps(hv - 1),

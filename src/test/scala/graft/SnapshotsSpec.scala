@@ -953,6 +953,71 @@ class SnapshotsSpec extends AnyFunSuite {
     assert(rows(dir, v4).size == 2500)
   }
 
+  test("MoR commits that kill no row carry the parent's vector; no empty vector is published") {
+    import spark.implicits._
+    // even ids 0..198 in 4 contiguous files: an odd id lies inside a
+    // file's zone-map range (the file is scanned) yet matches no row
+    def table(tag: String): String = {
+      val dir = java.nio.file.Files.createTempDirectory(s"snap_dv_zero_$tag").toString
+      Snapshots.commitOverwrite(
+        spark.range(0, 200, 2, 4).select(col("id"), (col("id") * 10).as("x")), dir, Seq("id"))
+      dir
+    }
+    def rows(dir: String, v: Int) =
+      Snapshots.readVersion(spark, dir, v).as[(Long, Long)].collect().toSet
+    def dvEntries(dir: String): Set[String] =
+      Option(new java.io.File(dir, "dv").list()).fold(Set.empty[String])(_.toSet)
+    // a zero-kill MoR delete, then an insert-only MoR merge, of `id`
+    def zeroKills(dir: String, id: Long): Unit = {
+      val v0 = Snapshots.latestVersion(spark, dir)
+      assert(Snapshots.manifest(spark, dir, v0)._2.exists(e => e.stats(0).min < id && e.stats(0).max > id))
+      val (dv0, sidecars0, rows0) = (Snapshots.dvInfo(spark, dir, v0), dvEntries(dir), rows(dir, v0))
+      val vd = Snapshots.commitDeleteMor(spark, dir, "id", id, id)
+      assert(Snapshots.dvInfo(spark, dir, vd) == dv0, s"zero-kill delete changed the vector at v$vd")
+      assert(rows(dir, vd) == rows0)
+      val vm = Snapshots.commitMergeMor(spark, dir, Seq((id, -id)).toDF("id", "x"), "id")
+      assert(Snapshots.dvInfo(spark, dir, vm) == dv0, s"insert-only merge changed the vector at v$vm")
+      assert(rows(dir, vm) == rows0 + ((id, -id)))
+      assert(dvEntries(dir) == sidecars0, "a zero-kill commit must leave no new dv/ entry")
+    }
+    // no vector live before: none after, so the metadata answers and a
+    // rename (both refuse under a live vector) still go through
+    val clean = table("clean")
+    zeroKills(clean, 51L)
+    val vc = Snapshots.latestVersion(spark, clean)
+    assert(Snapshots.dvInfo(spark, clean, vc).isEmpty)
+    assert(Snapshots.metadataMinMax(spark, clean, vc, "id") == ((0L, 198L)))
+    Snapshots.commitRename(spark, clean, "x", "y")
+    assert(Snapshots.readLatestEvolved(spark, clean).as[(Long, Long)].collect().toSet
+      == rows(clean, vc))
+    // a vector live before: carried by reference, not rewritten
+    val live = table("live")
+    Snapshots.commitDeleteMor(spark, live, "id", 100L, 110L)
+    assert(Snapshots.dvInfo(spark, live, 2).map(_._2).contains(6L))
+    zeroKills(live, 53L)
+    assert(rows(live, Snapshots.latestVersion(spark, live)).size == 100 - 6 + 1)
+  }
+
+  test("merges refuse a repeated key: the message names the key, nothing publishes or stays cached") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("snap_merge_dup").toString
+    Snapshots.commitOverwrite(Seq((1L, 10L), (2L, 20L)).toDF("card_id", "x"), dir, Seq("card_id"))
+    val dup = Seq((2L, 5L), (7L, 1L), (7L, 2L)).toDF("card_id", "x")
+    Seq[(String, () => Int)](
+      "commitMerge" -> (() => Snapshots.commitMerge(spark, dir, dup, "card_id")),
+      "commitMergeMor" -> (() => Snapshots.commitMergeMor(spark, dir, dup, "card_id"))
+    ).foreach { case (name, merge) =>
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      val e = intercept[IllegalArgumentException](merge())
+      assert(e.getMessage.contains("card_id"), s"$name refusal must name the key column: $e")
+      assert(Snapshots.latestVersion(spark, dir) == 1, s"$name published a refused batch")
+      assert(spark.sparkContext.getPersistentRDDs.keySet.toSet == before,
+        s"$name left persisted frames behind")
+    }
+    assert(Snapshots.readLatest(spark, dir).as[(Long, Long)].collect().toSet
+      == Set((1L, 10L), (2L, 20L)))
+  }
+
   test("bloom sidecars skip files on point lookups and never change results") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("snap_bloom").toString
