@@ -5,9 +5,11 @@ import org.json4s.{DefaultFormats, JArray, JObject, JValue}
 import org.json4s.jackson.JsonMethods
 
 /** Declarative feature-group schema, parsed from the reference's JSON
-  * schema files (SURVEY.md §1.1/§1.5; shape:
-  * `/root/reference/notebooks/schema/cc-agg-fg-schema.json:3-27`, parsing:
-  * `/root/reference/notebooks/1_setup.ipynb` `create_feature_group_from_schema`).
+  * schema files (SURVEY.md §1.1/§1.5; shape: the reference's
+  * `notebooks/schema/cc-agg-fg-schema.json:3-27`, parsing: its
+  * `notebooks/1_setup.ipynb` `create_feature_group_from_schema`). The in-repo
+  * copies of both schema files are `src/test/resources/reference-schema/`,
+  * transcribed from SURVEY §1.1/§1.5 and FIXTURES §4 (see FeatureGroupSchemaSpec).
   *
   * Reference semantics reproduced:
   *   - the type map: `double` -> Fractional, `bigint` -> Integral, anything
