@@ -2101,31 +2101,28 @@ object Snapshots {
   }
 
   /** Stage `prev ∪ positions` as a new vector sidecar and return the
-    * manifest header that publishes it. The cardinality comes from the
+    * manifest header that publishes it, with the cardinality from the
     * just-written footers (driver-side metadata, never a count job).
-    * `positions` are live, so they are disjoint from `prev`: a
-    * cardinality equal to `prev`'s means the commit killed no row, and
-    * then the staged copy is deleted and `prev` is carried as it was.
-    * Publishing it instead would put a vector on a table that had none
-    * (every read then pays the anti-join, and the metadata answers and
-    * renames refuse), or rewrite a live one unchanged.
+    * `positions` are live, so they are disjoint from `prev`, and none of
+    * them means the commit killed no row: then nothing is written and
+    * `prev` is carried as it was. Publishing a vector instead would put
+    * one on a table that had none (every read then pays the anti-join,
+    * and the metadata answers and renames refuse), or rewrite a live one
+    * unchanged. Both callers persist `positions`, so the emptiness test
+    * reads the cache that the write then reuses.
     */
   private def writeDv(
       spark: SparkSession,
       dir: String,
       prev: Option[(String, Long)],
       positions: DataFrame): String = {
-    val dvStage = new Path(dir, s"dv/dv-${java.util.UUID.randomUUID()}")
     val delta = positions.select(DvCols.map(col): _*)
+    if (delta.isEmpty) return dvHeader(prev)
+    val dvStage = new Path(dir, s"dv/dv-${java.util.UUID.randomUUID()}")
     prev
       .fold(delta) { case (p, _) => spark.read.parquet(p).unionByName(delta) }
       .write.mode("error").parquet(dvStage.toString)
-    val dvRows = footerRowsUnder(spark, dvStage)
-    if (dvRows > prev.fold(0L)(_._2)) dvHeader(Some((dvStage.toString, dvRows)))
-    else {
-      fs(spark, dvStage).delete(dvStage, true)
-      dvHeader(prev)
-    }
+    dvHeader(Some((dvStage.toString, footerRowsUnder(spark, dvStage))))
   }
 
   /** MERGE-ON-READ row-level DELETE — the deletion-vector twin of

@@ -6,10 +6,12 @@ import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor,
 
 /** Spark-4-native form of the per-event trailing-window operator
   * (SURVEY.md §2.8): a `StatefulProcessor` driven by `transformWithState`,
-  * holding the trailing buffer in engine-managed `ListState` instead of a
-  * monolithic case-class value — the state store sees individual list
-  * elements, which with the RocksDB provider means append is O(1) and the
-  * buffer never round-trips wholesale per event.
+  * holding the trailing buffer in engine-managed `ListState` instead of
+  * one packed value per key (the [[StreamingAgg.Buffer]] of the
+  * flatMapGroupsWithState form) — the state store sees individual list
+  * elements, which with the RocksDB provider means an in-order batch
+  * appends only its new elements instead of rewriting the key's whole
+  * buffer.
   *
   * Semantics are identical to [[StreamingAgg.trailingAgg]] (the
   * flatMapGroupsWithState form, which remains the default-state-store

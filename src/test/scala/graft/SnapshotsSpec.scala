@@ -1,5 +1,10 @@
 package graft
 
+import java.nio.file.{FileSystems, Paths, StandardWatchEventKinds}
+import java.util.concurrent.TimeUnit
+
+import scala.jdk.CollectionConverters._
+
 import graft.sources.Snapshots
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -980,10 +985,26 @@ class SnapshotsSpec extends AnyFunSuite {
       assert(rows(dir, vm) == rows0 + ((id, -id)))
       assert(dvEntries(dir) == sidecars0, "a zero-kill commit must leave no new dv/ entry")
     }
+    // every entry created directly under `dir`/dv while `body` runs, even
+    // one deleted again before `body` returns
+    def dvCreates(dir: String)(body: => Unit): Seq[String] = {
+      val ws = FileSystems.getDefault.newWatchService()
+      try {
+        Paths.get(dir, "dv").register(ws, StandardWatchEventKinds.ENTRY_CREATE)
+        body
+        Iterator.continually(ws.poll(1, TimeUnit.SECONDS)).takeWhile(_ != null).flatMap { key =>
+          val names = key.pollEvents().asScala.map(_.context.toString).toList
+          key.reset()
+          names
+        }.toList
+      } finally ws.close()
+    }
     // no vector live before: none after, so the metadata answers and a
     // rename (both refuse under a live vector) still go through
     val clean = table("clean")
     zeroKills(clean, 51L)
+    // nothing staged either: no dv/ directory, not even an emptied one
+    assert(!new java.io.File(clean, "dv").exists(), "zero-kill commits on a clean table wrote under dv/")
     val vc = Snapshots.latestVersion(spark, clean)
     assert(Snapshots.dvInfo(spark, clean, vc).isEmpty)
     assert(Snapshots.metadataMinMax(spark, clean, vc, "id") == ((0L, 198L)))
@@ -994,7 +1015,9 @@ class SnapshotsSpec extends AnyFunSuite {
     val live = table("live")
     Snapshots.commitDeleteMor(spark, live, "id", 100L, 110L)
     assert(Snapshots.dvInfo(spark, live, 2).map(_._2).contains(6L))
-    zeroKills(live, 53L)
+    // nothing to add to it: not even a staged copy, deleted again, lands
+    val staged = dvCreates(live)(zeroKills(live, 53L))
+    assert(staged.isEmpty, s"zero-kill commits wrote under dv/: ${staged.mkString(", ")}")
     assert(rows(live, Snapshots.latestVersion(spark, live)).size == 100 - 6 + 1)
   }
 

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.streaming.StreamingAgg.{AggEmit, StreamEvent, TrailingBuffer}
+import graft.streaming.StreamingAgg.{AggEmit, Buffer, StreamEvent, TrailingBuffer}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The per-batch trailing-buffer engine behind both stateful streaming
@@ -34,14 +34,15 @@ class TrailingBufferSpec extends AnyFunSuite {
       key: Long,
       batches: Seq[Seq[StreamEvent]],
       horizonUs: Long): (Seq[AggEmit], List[(Long, Long)]) = {
-    var state: List[(Long, Long)] = Nil
+    // carried between batches in the packed form the keyed state stores
+    var state = Buffer.pack(Array.empty)
     val out = batches.flatMap { batch =>
-      val engine = new TrailingBuffer(state, horizonUs)
+      val engine = new TrailingBuffer(state.events, horizonUs)
       val emits = batch.sortBy(_.ordUs).map(e => engine.add(key, e))
-      state = engine.snapshot.toList
+      state = Buffer.pack(engine.snapshot)
       emits
     }
-    (out, state)
+    (out, state.events.toList)
   }
 
   test("engine emissions and final buffer are bit-identical to the naive path (random replay with late events)") {
@@ -61,6 +62,20 @@ class TrailingBufferSpec extends AnyFunSuite {
     assert(engineOut == naiveOut) // AggEmit == compares the doubles bit-wise via equals
     // Same multiset, same order by ts (tie order may differ; values equal)
     assert(engineBuf.sortBy(identity) == naiveBuf.sortBy(identity))
+  }
+
+  test("packed state round-trips: empty, one event, same-ordUs ties, extreme ordUs, negative cents") {
+    val cases = Seq(
+      Array.empty[(Long, Long)],
+      Array((5L, 1234L)),
+      Array((7L, 100L), (7L, -3L), (7L, 0L), (8L, 1L)), // tie order is kept as given
+      Array((Long.MinValue, 1L), (0L, 0L), (Long.MaxValue, 2L)),
+      Array((-20L, -250L), (-20L, Long.MinValue), (3L, Long.MaxValue)))
+    cases.foreach { events =>
+      val packed = Buffer.pack(events)
+      assert(packed.packed.length == 16 * events.length)
+      assert(packed.events.toList == events.toList)
+    }
   }
 
   test("appendOnly is true exactly when the batch only appended in order with no prune") {
